@@ -258,6 +258,14 @@ def _np_affinities(V, C):
             "path raises DIVIDE_BY_ZERO here under ANSI mode)"
         )
     cn = np.sqrt((C * C).sum(axis=1).astype(np.float64))
+    if (cn == 0.0).any():
+        # ADVICE r14: a degenerate zero-norm CENTROID must raise exactly
+        # like the literal SQL path (ANSI DIVIDE_BY_ZERO), not silently
+        # produce inf/nan affinities in the Arrow path.
+        raise ArithmeticError(
+            "assign_cells: zero-norm centroid — division by zero (the SQL "
+            "path raises DIVIDE_BY_ZERO here under ANSI mode)"
+        )
     return dots.astype(np.float64) / (qn[:, None] * cn[None, :])
 
 
@@ -783,6 +791,31 @@ def pq_init_codebooks(
     return out
 
 
+def _codebook_matrices(
+    codebook_rows: list[tuple[int, int, list[int]]], m_subs: int
+):
+    """Per-subspace codeword matrices for the Arrow PQ/IVF-PQ encoders.
+
+    ADVICE r14: the encoders use the positional argmin index AS the code
+    id, so each subspace's matrix must be ordered by code with contiguous
+    codes 0..k-1 — order explicitly and assert contiguity instead of
+    silently trusting the caller's row order (rows re-read from storage
+    arrive in any order; the SQL path joins on the explicit code column
+    and never had this assumption)."""
+    import numpy as np
+
+    out = []
+    for m in range(m_subs):
+        by_code = sorted((c, cw) for s, c, cw in codebook_rows if s == m)
+        if [c for c, _ in by_code] != list(range(len(by_code))):
+            raise ValueError(
+                f"PQ codebook: subspace {m} codes are not contiguous "
+                f"0..k-1: {[c for c, _ in by_code]}"
+            )
+        out.append(np.array([cw for _, cw in by_code], dtype=np.int64))
+    return out
+
+
 def _pq_codes_arrow(
     q: DataFrame,
     codebook_rows: list[tuple[int, int, list[int]]],
@@ -808,12 +841,7 @@ def _pq_codes_arrow(
         StructType,
     )
 
-    CW = [
-        np.array(
-            [cw for s, c, cw in codebook_rows if s == m], dtype=np.int64
-        )
-        for m in range(m_subs)
-    ]
+    CW = _codebook_matrices(codebook_rows, m_subs)
 
     @F.pandas_udf(
         StructType(
@@ -1116,12 +1144,7 @@ def ivfpq_assign_codes(
         )
 
         CENT = np.array(centroids, dtype=np.int64)
-        CW = [
-            np.array(
-                [cw for s, c, cw in codebook_rows if s == m], dtype=np.int64
-            )
-            for m in range(m_subs)
-        ]
+        CW = _codebook_matrices(codebook_rows, m_subs)
 
         @F.pandas_udf(
             StructType(

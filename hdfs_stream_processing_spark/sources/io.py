@@ -11,6 +11,8 @@ py4j, no inference passes.
 
 from __future__ import annotations
 
+import json
+import re
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -153,22 +155,30 @@ def schema_checked(df: DataFrame, table: str) -> DataFrame:
     return df
 
 
+def _fs_for(spark: SparkSession, path: str):
+    """The Hadoop ``Path`` class and the FileSystem serving ``path``.
+
+    Every ``spark._jvm.org.apache.hadoop.fs.Path`` lookup walks the
+    package path over py4j (1–2 ms), so callers resolve the class here
+    once and build each further path from it."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    return Path, Path(path).getFileSystem(spark._jsc.hadoopConfiguration())
+
+
 def swap_dirs(spark: SparkSession, new_dir: str, live_dir: str) -> None:
     """Publish ``new_dir`` over ``live_dir`` via Hadoop FS renames — the
     swap step :func:`compact_parquet_dir` leaves to its caller.  On HDFS
     a rename is one atomic namenode metadata op, so readers see either
     the old directory or the new one, never a half-compacted mix; the
     retired directory is deleted after the swap."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    live = jvm.org.apache.hadoop.fs.Path(live_dir)
-    fs = live.getFileSystem(conf)
-    retired = jvm.org.apache.hadoop.fs.Path(live_dir.rstrip("/") + "._retired")
+    Path, fs = _fs_for(spark, live_dir)
+    live = Path(live_dir)
+    retired = Path(live_dir.rstrip("/") + "._retired")
     if fs.exists(retired):
         fs.delete(retired, True)
     if not fs.rename(live, retired):
         raise IOError(f"swap_dirs: could not retire {live_dir}")
-    if not fs.rename(jvm.org.apache.hadoop.fs.Path(new_dir), live):
+    if not fs.rename(Path(new_dir), live):
         fs.rename(retired, live)  # roll back
         raise IOError(f"swap_dirs: could not publish {new_dir}")
     fs.delete(retired, True)
@@ -179,10 +189,8 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     S3A, and local alike).  One metadata call — lets callers distinguish
     "table not created yet" from transient read failures instead of
     swallowing every exception."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
+    Path, fs = _fs_for(spark, path)
+    return bool(fs.exists(Path(path)))
 
 
 def parquet_table_exists(spark: SparkSession, path: str) -> bool:
@@ -198,9 +206,8 @@ def parquet_table_exists(spark: SparkSession, path: str) -> bool:
     on a REAL table — silently resetting accumulated state.  Here only
     the not-a-table-yet cases return False; everything else raises.
     Metadata-only: one recursive listing, no data read."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    Path, fs = _fs_for(spark, path)
+    hpath = Path(path)
     if not fs.exists(hpath):
         return False
     it = fs.listFiles(hpath, True)
@@ -215,10 +222,8 @@ def dir_bytes(spark: SparkSession, path: str) -> int:
     """Total bytes under a path via the Hadoop FileSystem API (works for
     HDFS, S3A, and local alike).  Metadata-only — one namenode call, no
     data read."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return int(fs.getContentSummary(hpath).getLength())
+    Path, fs = _fs_for(spark, path)
+    return int(fs.getContentSummary(Path(path)).getLength())
 
 
 def compact_parquet_dir(
@@ -343,25 +348,64 @@ def upsert_partitioned(
 # Versioned table: snapshot directories + an atomically-published pointer
 # ---------------------------------------------------------------------------
 
-def _fs_for(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+def _read_text(fs, hpath) -> str | None:
+    """Contents of a small ASCII file, or None when it does not exist."""
+    if not fs.exists(hpath):
+        return None
+    stream = fs.open(hpath)
+    try:
+        return bytes(stream.readAllBytes()).decode("ascii")
+    finally:
+        stream.close()
+
+
+def _write_text(fs, hpath, text: str) -> None:
+    out = fs.create(hpath, True)
+    try:
+        out.write(bytearray(text.encode("ascii")))
+    finally:
+        out.close()
+
+
+_VERSION_DIR = re.compile(r"v=([0-9]+)")
+
+
+def _listed_versions(fs, Path, base: str) -> list[int]:
+    """Sorted ``k`` of every ``v=<k>`` entry directly under ``base``,
+    from one listing; [] when ``base`` does not exist."""
+    hbase = Path(base)
+    if not fs.exists(hbase):
+        return []
+    names = (st.getPath().getName() for st in fs.listStatus(hbase))
+    return sorted(int(m[1]) for m in map(_VERSION_DIR.fullmatch, names) if m)
+
+
+#: Marks the current ``v=<n>/_meta.json`` layout: ``{"sidecar": 2,
+#: "meta": <caller meta or null>, "schema": <snapshot schema JSON>}``.
+#: r14 sidecars hold the bare caller ``meta`` dict instead, and older
+#: snapshots have no sidecar at all.
+_SIDECAR = 2
+
+
+def _read_sidecar(spark: SparkSession, table_dir: str, v: int):
+    """``(caller meta, schema JSON)`` recorded for snapshot ``v``;
+    either is None when the snapshot's layout predates it."""
+    Path, fs = _fs_for(spark, table_dir)
+    raw = _read_text(fs, Path(f"{table_dir.rstrip('/')}/v={v}/_meta.json"))
+    if raw is None:
+        return None, None
+    doc = json.loads(raw)
+    if doc.get("sidecar") != _SIDECAR:
+        return doc, None
+    return doc["meta"], doc["schema"]
 
 
 def table_latest_version(spark: SparkSession, table_dir: str) -> int | None:
     """Version the ``_latest`` pointer currently publishes, or None for
     a table that has never committed."""
-    jvm, fs = _fs_for(spark, table_dir)
-    ptr = jvm.org.apache.hadoop.fs.Path(table_dir.rstrip("/") + "/_latest")
-    if not fs.exists(ptr):
-        return None
-    stream = fs.open(ptr)
-    try:
-        raw = bytes(stream.readAllBytes()).decode("ascii").strip()
-    finally:
-        stream.close()
-    return int(raw)
+    Path, fs = _fs_for(spark, table_dir)
+    raw = _read_text(fs, Path(table_dir.rstrip("/") + "/_latest"))
+    return None if raw is None else int(raw.strip())
 
 
 def write_table_version(
@@ -374,7 +418,8 @@ def write_table_version(
     it — the minimal form of the Iceberg/Delta snapshot protocol:
 
     1. data lands in a NEW directory ``v=<n>/`` (never touched again);
-    2. the ``_latest`` pointer file is written aside and renamed over
+    2. the sidecar ``v=<n>/_meta.json`` is written;
+    3. the ``_latest`` pointer file is written aside and renamed over
        the old pointer.
 
     Readers resolving the pointer therefore see the previous snapshot
@@ -383,38 +428,36 @@ def write_table_version(
     :func:`vacuum_table_versions` retires it — time travel, audits,
     and rollback are all "read an older v=".
 
+    ``n`` is one past the larger of the pointer and the highest
+    ``v=<k>`` in the table directory, so a snapshot orphaned by a
+    crash before its pointer flip is skipped over instead of failing
+    every retry on an existing path; vacuum removes it later.
+
     The delete+rename pointer flip is atomic enough for a single
     writer (this engine's loaders run one committer per table); a
     multi-writer lake puts the pointer CAS in a metastore/catalog
     instead — the layout here is deliberately that same shape.
 
-    ``meta`` (r14 optimization, guide §5 "the driver should do almost
-    no data work"): small JSON-able commit facts (e.g. the streaming
-    batch id) land in ``v=<n>/_meta.json`` BEFORE the pointer flip, so
-    readers resolve them with one driver-side file read instead of a
-    Spark job over the snapshot — the miniature of Iceberg/Delta
-    keeping snapshot properties in the manifest, not in the data.
+    The sidecar always exists.  It records ``df``'s schema, so
+    :func:`read_table_version` reads with a declared schema instead of
+    starting a Parquet footer-inference job, and the caller's ``meta``
+    (small JSON-able commit facts, e.g. the streaming batch id), so
+    :func:`table_version_meta` resolves them with one driver-side file
+    read instead of a Spark job over the snapshot — the miniature of
+    Iceberg/Delta keeping snapshot properties in the manifest, not in
+    the data.
     """
-    n = (table_latest_version(spark, table_dir) or 0) + 1
+    Path, fs = _fs_for(spark, table_dir)
     base = table_dir.rstrip("/")
+    n = 1 + max(
+        [table_latest_version(spark, table_dir) or 0, *_listed_versions(fs, Path, base)]
+    )
     df.write.mode("error").parquet(f"{base}/v={n}/data")
-    jvm, fs = _fs_for(spark, table_dir)
-    if meta is not None:
-        import json as _json
-
-        mpath = jvm.org.apache.hadoop.fs.Path(f"{base}/v={n}/_meta.json")
-        mout = fs.create(mpath, True)
-        try:
-            mout.write(bytearray(_json.dumps(meta).encode("ascii")))
-        finally:
-            mout.close()
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{base}/_latest.tmp")
-    ptr = jvm.org.apache.hadoop.fs.Path(f"{base}/_latest")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(str(n).encode("ascii")))
-    finally:
-        out.close()
+    sidecar = {"sidecar": _SIDECAR, "meta": meta, "schema": df.schema.jsonValue()}
+    _write_text(fs, Path(f"{base}/v={n}/_meta.json"), json.dumps(sidecar))
+    tmp = Path(f"{base}/_latest.tmp")
+    ptr = Path(f"{base}/_latest")
+    _write_text(fs, tmp, str(n))
     if fs.exists(ptr):
         fs.delete(ptr, False)
     if not fs.rename(tmp, ptr):
@@ -426,57 +469,51 @@ def read_table_version(
     spark: SparkSession, table_dir: str, version: int | None = None
 ) -> DataFrame:
     """Read a snapshot: the pointer's latest by default, or any retained
-    ``version`` for time travel."""
+    ``version`` for time travel.
+
+    The read uses the schema the sidecar recorded at commit, so it
+    starts no Spark job; a snapshot whose sidecar predates the schema
+    record has it inferred from the Parquet footers."""
     v = version if version is not None else table_latest_version(spark, table_dir)
     if v is None:
         raise FileNotFoundError(f"no committed version in {table_dir}")
-    return spark.read.parquet(f"{table_dir.rstrip('/')}/v={v}/data")
+    _, schema = _read_sidecar(spark, table_dir, v)
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(T.StructType.fromJson(schema))
+    return reader.parquet(f"{table_dir.rstrip('/')}/v={v}/data")
 
 
 def table_version_meta(
     spark: SparkSession, table_dir: str, version: int | None = None
 ) -> dict | None:
-    """Commit metadata of a snapshot (``v=<n>/_meta.json``), or None
-    when the snapshot was written without ``meta`` — callers that need
-    a fact recorded there must fall back to deriving it from the data
-    (the pre-r14 snapshots carry no sidecar)."""
-    import json as _json
-
+    """The ``meta`` a snapshot was committed with (kept in
+    ``v=<n>/_meta.json``), or None when it was written without one or
+    carries no sidecar — callers that need a fact recorded there must
+    fall back to deriving it from the data."""
     v = version if version is not None else table_latest_version(spark, table_dir)
     if v is None:
         return None
-    jvm, fs = _fs_for(spark, table_dir)
-    mpath = jvm.org.apache.hadoop.fs.Path(
-        f"{table_dir.rstrip('/')}/v={v}/_meta.json"
-    )
-    if not fs.exists(mpath):
-        return None
-    stream = fs.open(mpath)
-    try:
-        raw = bytes(stream.readAllBytes()).decode("ascii")
-    finally:
-        stream.close()
-    return _json.loads(raw)
+    return _read_sidecar(spark, table_dir, v)[0]
 
 
 def vacuum_table_versions(
     spark: SparkSession, table_dir: str, keep_last: int = 2
 ) -> list[int]:
-    """Retire all but the newest ``keep_last`` snapshots (never the
-    published one); returns the versions removed.  Partition-dir
-    deletes only — data files of retained versions are never touched.
+    """Retire every snapshot ``v=<k>`` with ``k <= latest - keep_last``
+    (never the published one); returns the versions removed, sorted.
+    One listing of the table directory finds them; partition-dir
+    deletes only — data files of retained versions, the pointer and
+    any other entry are never touched.
     """
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     latest = table_latest_version(spark, table_dir)
     if latest is None:
         return []
-    jvm, fs = _fs_for(spark, table_dir)
+    Path, fs = _fs_for(spark, table_dir)
     base = table_dir.rstrip("/")
-    removed = []
-    for v in range(1, max(1, latest - keep_last + 1)):
-        p = jvm.org.apache.hadoop.fs.Path(f"{base}/v={v}")
-        if fs.exists(p):
-            fs.delete(p, True)
-            removed.append(v)
+    removed = [k for k in _listed_versions(fs, Path, base) if k <= latest - keep_last]
+    for k in removed:
+        fs.delete(Path(f"{base}/v={k}"), True)
     return removed

@@ -668,9 +668,9 @@ def vacuum_cdc_tombstones(
 
 def _committed_batch(spark, table_dir: str, version: int, existing: DataFrame):
     """The micro-batch id a committed snapshot carries — from the
-    ``_meta.json`` sidecar when present (one driver-side file read,
-    r14 optimization), else from a ``max(_batch)`` scan of the data
-    (pre-r14 snapshots have no sidecar).  The ``_batch`` column is
+    ``_meta.json`` sidecar when it records one (one driver-side file
+    read, r14 optimization), else from a ``max(_batch)`` scan of the
+    data (pre-r14 snapshots have no sidecar).  The ``_batch`` column is
     written as a constant literal per snapshot, so the two reads are
     definitionally equal whenever both exist."""
     from hdfs_stream_processing_spark.sources.io import table_version_meta

@@ -196,6 +196,74 @@ def test_versioned_table_commit_time_travel_vacuum(spark, tmp_path):
         read_table_version(spark, tdir, version=1).count()
 
 
+def test_vacuum_removes_exactly_old_versions_with_one_listing(spark, tmp_path):
+    """Over 40 commits, with a version gap and stray ``_latest.tmp`` and
+    ``v=abc`` entries, vacuum removes exactly the snapshots
+    ``<= latest - keep_last``, returns them sorted, and leaves every
+    other entry of the table directory alone."""
+    import os
+    import shutil
+
+    from hdfs_stream_processing_spark.sources.io import (
+        read_table_version,
+        vacuum_table_versions,
+        write_table_version,
+    )
+
+    tdir = str(tmp_path / "vt")
+    for i in range(40):
+        write_table_version(spark, spark.range(i + 1), tdir)
+    shutil.rmtree(os.path.join(tdir, "v=10"))  # gap
+    os.mkdir(os.path.join(tdir, "v=abc"))
+    with open(os.path.join(tdir, "_latest.tmp"), "w") as f:
+        f.write("41")
+    before = set(os.listdir(tdir))
+
+    removed = vacuum_table_versions(spark, tdir, keep_last=3)
+    assert removed == [v for v in range(1, 38) if v != 10]
+    assert set(os.listdir(tdir)) == before - {f"v={v}" for v in removed}
+    assert {"v=38", "v=39", "v=40", "v=abc", "_latest", "_latest.tmp"} <= before
+    assert read_table_version(spark, tdir).count() == 40
+    assert read_table_version(spark, tdir, 38).count() == 38
+    assert vacuum_table_versions(spark, tdir, keep_last=3) == []
+    assert vacuum_table_versions(spark, tdir, keep_last=1) == [38, 39]
+
+
+def test_commit_skips_snapshot_orphaned_before_pointer_flip(spark, tmp_path):
+    """Crash window (a): a crash after ``v=<n>/data`` is written but
+    before the pointer flip leaves an orphan snapshot.  The retried
+    commit must take the next free version instead of failing on the
+    existing path, publish the new rows, and a later vacuum retires
+    the orphan."""
+    import os
+
+    from hdfs_stream_processing_spark.sources.io import (
+        read_table_version,
+        table_latest_version,
+    )
+    from hdfs_stream_processing_spark.streaming.pipeline import rollup_apply_batch
+
+    tdir = str(tmp_path / "roll")
+    batch = spark.createDataFrame([("a", 2), ("b", 1)], "k string, n long")
+    assert rollup_apply_batch(batch, tdir, ["k"], ["n"], batch_id=0)
+    # batch 1 crashed after its data write: v=2/data exists, unpublished
+    spark.createDataFrame([("zz", 99)], "k string, n long").write.parquet(
+        f"{tdir}/v=2/data"
+    )
+    assert table_latest_version(spark, tdir) == 1
+
+    assert rollup_apply_batch(batch, tdir, ["k"], ["n"], batch_id=1)
+    assert table_latest_version(spark, tdir) == 3
+    got = {
+        r["k"]: r["n"]
+        for r in read_table_version(spark, tdir).drop("_batch").collect()
+    }
+    assert got == {"a": 4, "b": 2}
+
+    assert rollup_apply_batch(batch, tdir, ["k"], ["n"], batch_id=2)
+    assert sorted(n for n in os.listdir(tdir) if n.startswith("v=")) == ["v=3", "v=4"]
+
+
 def test_corrupt_json_lines_are_quarantined_not_dropped(spark):
     """PERMISSIVE JSON scan: every malformed line lands in
     _corrupt_record (count preserved), no valid row is lost, and the
