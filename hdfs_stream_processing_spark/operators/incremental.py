@@ -209,13 +209,11 @@ def rollup_merge(
 
     Scale: one union + one hash agg on the key — the merged table is
     keyed-small (group cardinality, not event cardinality); both sides
-    partial-aggregate map-side before the single exchange.
+    partial-aggregate map-side before the single exchange.  This is
+    :func:`rollup_merge_mixed` with every column a ``'sum'``.
     """
-    return (
-        existing.select(*keys, *merge_cols)
-        .unionByName(batch_partial.select(*keys, *merge_cols))
-        .groupBy(*keys)
-        .agg(*[F.sum(c).alias(c) for c in merge_cols])
+    return rollup_merge_mixed(
+        existing, batch_partial, keys, {c: "sum" for c in merge_cols}
     )
 
 
@@ -238,8 +236,8 @@ def rollup_merge_mixed(
     substring-scrub keeper "smallest (doc, offset) that ever carried
     this window content" is a plain min-merge.
 
-    Same plan shape as rollup_merge: one union + one hash agg on the
-    key, map-side partials on both sides.
+    Scale: one union + one hash agg on the key, map-side partials on
+    both sides.
     """
     bad = {fn for fn in merge_spec.values() if fn not in _MERGE_FNS}
     if bad:

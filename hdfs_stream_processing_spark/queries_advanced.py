@@ -2274,87 +2274,45 @@ def golden_apply_batch(
     """One streaming golden-maintenance step: fold a document
     micro-batch into the maintained state (bands, component labels,
     attributes, golden) via :func:`_golden_step` and commit ALL FOUR
-    logical tables as ONE immutable combined snapshot stamped with the
-    batch id (r15, VERDICT r14 #6 — the r14 shape committed four
-    separate versioned tables per micro-batch: 4 write jobs, 4 sidecars,
-    4 pointer flips, and a resolve() that had to walk past partially
-    stamped tables after a crash; one multi-schema commit per batch
-    makes the batch atomic BY CONSTRUCTION — the pointer flip is the
-    last step of the single commit, so replay sees either the whole
-    previous state or the whole new one).
-
-    Replay contract: a batch whose id ≤ the committed snapshot's stamp
-    already landed → early-return False.  The stamp comes from the
-    ``_meta.json`` sidecar (driver-side file read); sidecar-less
-    snapshots (pre-r14 layout) fall back to a ``max(_batch)`` scan."""
-    from hdfs_stream_processing_spark.sources.io import (
-        read_table_version,
-        table_latest_version,
-        table_version_meta,
-        write_table_version,
-    )
+    logical tables as ONE combined snapshot (r15, VERDICT r14 #6 — the
+    r14 shape committed four separate versioned tables per
+    micro-batch; one multi-schema commit makes the batch atomic BY
+    CONSTRUCTION).  Replay guard, commit and vacuum are
+    :func:`~hdfs_stream_processing_spark.sources.io.apply_versioned_batch`'s
+    contract; returns False for a replayed batch."""
+    from hdfs_stream_processing_spark.sources.io import apply_versioned_batch
 
     spark = batch_df.sparkSession
-    latest = table_latest_version(spark, state)
-    if latest is not None:
-        m = table_version_meta(spark, state, latest)
-        if m is not None and "batch" in m:
-            done = m["batch"]
-        else:  # sidecar-less snapshot: derive the stamp from the data
-            done = (
-                read_table_version(spark, state, latest)
-                .select(F.max("_batch"))
-                .first()[0]
-            )
-        if done is not None and done >= batch_id:
-            return False  # this batch's snapshot already published
-        snap = read_table_version(spark, state, latest).drop("_batch")
-        g_old = _golden_slice(snap, "golden")
-        bands_old = _golden_slice(snap, "bands")
-        comp_old = _golden_slice(snap, "comp")
-        attrs_old = _golden_slice(snap, "attrs")
-    else:
-        g_old = spark.createDataFrame([], _GOLDEN_STATE_DDL["golden"])
-        bands_old = spark.createDataFrame([], _GOLDEN_STATE_DDL["bands"])
-        comp_old = spark.createDataFrame([], _GOLDEN_STATE_DDL["comp"])
-        attrs_old = spark.createDataFrame([], _GOLDEN_STATE_DDL["attrs"])
-    batch = batch_df.select("doc_id", "text", "lang", "source", "n_chars")
-    new_golden, new_comp, bands_b = _golden_step(
-        batch, bands_old, comp_old, attrs_old, g_old
-    )
-    # The single write below IS the materialization of every output
-    # (all reads pin the immutable ``v=<latest>/data`` path resolved
-    # above; shared subplans — sig_b, bands_b, mcomp, members — are
-    # reused through their lazy checkpoints inside _golden_step).
-    new_bands = bands_old.unionByName(bands_b)
-    new_attrs = attrs_old.unionByName(
-        batch.select("doc_id", "lang", "source", "n_chars")
-    )
-    packed = (
-        _golden_pack("bands", new_bands)
-        .unionByName(_golden_pack("comp", new_comp))
-        .unionByName(_golden_pack("attrs", new_attrs))
-        .unionByName(_golden_pack("golden", new_golden))
-        .withColumn("_batch", F.lit(batch_id))
-    )
-    # Bound the snapshot's file count: the naive union write emits one
-    # file per upstream partition (measured 34–64 KB-sized files per
-    # snapshot at sf0.1 — the small-files trap of guide §6, paid again
-    # by every later batch's re-read).  repartition — NOT coalesce —
-    # because coalesce would fold the whole narrow upstream (the batch
-    # minhash included) into the few write tasks (measured +2 s/run);
-    # the extra exchange moves only KB–MB of state rows here.  The
-    # count is env-tunable because the right number tracks STATE BYTES
-    # (a production deployment would REBALANCE to the advisory
-    # partition size instead — state there is corpus-sized, here it is
-    # fixture-sized).
-    import os as _os
 
-    n_files = max(1, int(_os.environ.get("HSP_GOLDEN_STATE_FILES", "8")))
-    write_table_version(
-        spark, packed.repartition(n_files), state, meta={"batch": batch_id}
-    )
-    return True
+    def merge(snap):
+        old = {
+            name: spark.createDataFrame([], ddl)
+            if snap is None
+            else _golden_slice(snap, name)
+            for name, ddl in _GOLDEN_STATE_DDL.items()
+        }
+        batch = batch_df.select("doc_id", "text", "lang", "source", "n_chars")
+        new_golden, new_comp, bands_b = _golden_step(
+            batch, old["bands"], old["comp"], old["attrs"], old["golden"]
+        )
+        # The single write of the commit IS the materialization of
+        # every output (all reads pin the immutable ``v=<latest>/data``
+        # path; shared subplans — sig_b, bands_b, mcomp, members — are
+        # reused through their lazy checkpoints inside _golden_step).
+        new_bands = old["bands"].unionByName(bands_b)
+        new_attrs = old["attrs"].unionByName(
+            batch.select("doc_id", "lang", "source", "n_chars")
+        )
+        packed = (
+            _golden_pack("bands", new_bands)
+            .unionByName(_golden_pack("comp", new_comp))
+            .unionByName(_golden_pack("attrs", new_attrs))
+            .unionByName(_golden_pack("golden", new_golden))
+        )
+        # repartition, not coalesce: coalesce would run the batch minhash in 8 tasks
+        return packed.repartition(8)
+
+    return apply_versioned_batch(spark, state, batch_id, merge)
 
 # Round 8: MinHash-LSH recall contract, winsorization
 # ========================================================================

@@ -14,6 +14,7 @@ from __future__ import annotations
 import json
 import re
 import weakref
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -402,10 +403,19 @@ def _read_sidecar(spark: SparkSession, table_dir: str, v: int):
 
 def table_latest_version(spark: SparkSession, table_dir: str) -> int | None:
     """Version the ``_latest`` pointer currently publishes, or None for
-    a table that has never committed."""
+    a table that has never committed.
+
+    With no ``_latest`` the pointer is recovered from ``_latest.tmp``:
+    :func:`write_table_version` writes and closes that file before it
+    deletes the old pointer, so a crash between the delete and the
+    rename leaves the complete new pointer there.  An empty
+    ``_latest.tmp`` (a crash inside its write) counts as no pointer."""
     Path, fs = _fs_for(spark, table_dir)
-    raw = _read_text(fs, Path(table_dir.rstrip("/") + "/_latest"))
-    return None if raw is None else int(raw.strip())
+    base = table_dir.rstrip("/")
+    raw = _read_text(fs, Path(f"{base}/_latest"))
+    if raw is None:
+        raw = _read_text(fs, Path(f"{base}/_latest.tmp")) or ""
+    return int(raw) if raw.strip() else None
 
 
 def write_table_version(
@@ -419,8 +429,8 @@ def write_table_version(
 
     1. data lands in a NEW directory ``v=<n>/`` (never touched again);
     2. the sidecar ``v=<n>/_meta.json`` is written;
-    3. the ``_latest`` pointer file is written aside and renamed over
-       the old pointer.
+    3. the ``_latest`` pointer file is written aside as ``_latest.tmp``
+       and renamed over the old pointer.
 
     Readers resolving the pointer therefore see the previous snapshot
     or the new one, never a half-written mix, and every prior version
@@ -436,7 +446,10 @@ def write_table_version(
     The delete+rename pointer flip is atomic enough for a single
     writer (this engine's loaders run one committer per table); a
     multi-writer lake puts the pointer CAS in a metastore/catalog
-    instead — the layout here is deliberately that same shape.
+    instead — the layout here is deliberately that same shape.  After
+    a crash between the delete and the rename,
+    :func:`table_latest_version` recovers the pointer from
+    ``_latest.tmp``.
 
     The sidecar always exists.  It records ``df``'s schema, so
     :func:`read_table_version` reads with a declared schema instead of
@@ -517,3 +530,47 @@ def vacuum_table_versions(
     for k in removed:
         fs.delete(Path(f"{base}/v={k}"), True)
     return removed
+
+
+def apply_versioned_batch(
+    spark: SparkSession,
+    table_dir: str,
+    batch_id: int,
+    merge: Callable[[DataFrame | None], DataFrame],
+) -> bool:
+    """Commit one micro-batch to a maintained-state table: the replay
+    guard, commit and vacuum every streaming maintainer (rollup, mixed
+    rollup, SCD2, golden) shares.
+
+    ``merge(existing)`` gets the latest snapshot without its ``_batch``
+    column, or None before the first commit, and returns the new state.
+    That is committed (:func:`write_table_version`) with ``batch_id`` as
+    the long ``_batch`` column and as the sidecar meta's ``batch``, then
+    all but the last two snapshots are vacuumed.
+
+    Merges are not replay-idempotent (a re-added batch double-counts),
+    so a ``batch_id`` at or below the committed stamp is skipped.  The
+    stamp comes from the sidecar (a driver-side read, no Spark job), or
+    for a snapshot without one from a ``max(_batch)`` scan.  Returns
+    True when a snapshot was committed, False for a replay skip.
+    """
+    latest = table_latest_version(spark, table_dir)
+    existing = None
+    if latest is not None:
+        snap = read_table_version(spark, table_dir, latest)
+        meta = table_version_meta(spark, table_dir, latest)
+        if meta is not None and "batch" in meta:
+            done = meta["batch"]
+        else:
+            done = snap.agg(F.max("_batch")).first()[0]
+        if done is not None and batch_id <= done:
+            return False
+        existing = snap.drop("_batch")
+    write_table_version(
+        spark,
+        merge(existing).withColumn("_batch", F.lit(batch_id).cast("long")),
+        table_dir,
+        meta={"batch": batch_id},
+    )
+    vacuum_table_versions(spark, table_dir, keep_last=2)
+    return True

@@ -666,21 +666,6 @@ def vacuum_cdc_tombstones(
     return n_dead
 
 
-def _committed_batch(spark, table_dir: str, version: int, existing: DataFrame):
-    """The micro-batch id a committed snapshot carries — from the
-    ``_meta.json`` sidecar when it records one (one driver-side file
-    read, r14 optimization), else from a ``max(_batch)`` scan of the
-    data (pre-r14 snapshots have no sidecar).  The ``_batch`` column is
-    written as a constant literal per snapshot, so the two reads are
-    definitionally equal whenever both exist."""
-    from hdfs_stream_processing_spark.sources.io import table_version_meta
-
-    m = table_version_meta(spark, table_dir, version)
-    if m is not None and "batch" in m:
-        return m["batch"]
-    return existing.agg(F.max("_batch")).collect()[0][0]  # 1 row
-
-
 def scd2_apply_batch(
     batch_df: DataFrame,
     table_dir: str,
@@ -694,21 +679,12 @@ def scd2_apply_batch(
     :func:`run_stream_scd2` runs per micro-batch; public so batch
     backfills reuse it and tests drive arbitrary batch splits).
 
-    First batch bootstraps the dimension with ``scd2_build``; every
-    later batch folds in through ``scd2_merge`` — history is never
-    rebuilt.  Each step commits a NEW immutable snapshot through the
-    versioned-table pointer protocol (``write_table_version``), so a
-    reader mid-merge sees the previous complete dimension, never a
-    half-written one, and the dimension gets time travel for free.
-
-    Replay safety: an SCD2 merge is not content-idempotent (re-merging
-    an already-absorbed change set against the updated open versions
-    would replay history out of order), so each snapshot records the
-    micro-batch id that produced it in ``_batch``; a batch whose id ≤
-    the committed ``_batch`` already produced a published snapshot and
-    is skipped (same guard family as ``run_continuous_rollup``'s
-    last_batch, here table-level because the commit is all-or-nothing).
-    Old snapshots are vacuumed to the last two.
+    Merge: the first batch bootstraps the dimension with
+    ``scd2_build``; every later batch folds in through ``scd2_merge``
+    — history is never rebuilt.  Replay guard, snapshot commit and
+    vacuum are :func:`~hdfs_stream_processing_spark.sources.io.apply_versioned_batch`'s
+    contract, so a reader mid-merge sees the previous complete
+    dimension and the dimension gets time travel.
 
     Ordering contract (inherited from ``scd2_merge``): batches arrive
     per-key in ``ts_col`` order.  Out-of-order arrivals must be routed
@@ -721,34 +697,16 @@ def scd2_apply_batch(
         scd2_build,
         scd2_merge,
     )
-    from hdfs_stream_processing_spark.sources.io import (
-        read_table_version,
-        table_latest_version,
-        vacuum_table_versions,
-        write_table_version,
-    )
+    from hdfs_stream_processing_spark.sources.io import apply_versioned_batch
 
-    spark = batch_df.sparkSession
-    latest = table_latest_version(spark, table_dir)
-    if latest is None:
-        merged = scd2_build(batch_df, key_cols, ts_col, attr_col, tiebreak_cols)
-    else:
-        existing = read_table_version(spark, table_dir, latest)
-        last_batch = _committed_batch(spark, table_dir, latest, existing)
-        if last_batch is not None and batch_id <= last_batch:
-            return False  # replayed batch: snapshot already published
-        merged = scd2_merge(
-            existing.drop("_batch"), batch_df, key_cols, ts_col, attr_col,
-            tiebreak_cols,
+    def merge(existing):
+        if existing is None:
+            return scd2_build(batch_df, key_cols, ts_col, attr_col, tiebreak_cols)
+        return scd2_merge(
+            existing, batch_df, key_cols, ts_col, attr_col, tiebreak_cols
         )
-    write_table_version(
-        spark,
-        merged.withColumn("_batch", F.lit(batch_id).cast("long")),
-        table_dir,
-        meta={"batch": batch_id},
-    )
-    vacuum_table_versions(spark, table_dir, keep_last=2)
-    return True
+
+    return apply_versioned_batch(batch_df.sparkSession, table_dir, batch_id, merge)
 
 
 def run_stream_scd2(
@@ -791,47 +749,28 @@ def rollup_apply_batch(
     batch_id: int = 0,
 ) -> bool:
     """One streaming materialized-rollup step: fold a micro-batch's
-    PARTIAL aggregate into the stored rollup via ``rollup_merge`` and
-    commit the result as a new immutable snapshot (versioned-table
-    pointer).  Additive merges are not replay-idempotent (re-adding a
-    batch double-counts), so the committed snapshot carries the batch
-    id in ``_batch`` and a replayed id is skipped — same guard as
-    :func:`scd2_apply_batch`, complementary to
-    :func:`run_continuous_rollup`'s per-key last_batch (that one scopes
-    partition rewrites; this one is table-snapshot-atomic and gives the
-    rollup time travel).
+    PARTIAL aggregate into the stored rollup via ``rollup_merge`` (the
+    first batch's partial is the rollup) and commit it through
+    :func:`~hdfs_stream_processing_spark.sources.io.apply_versioned_batch`,
+    whose replay guard keeps the additive merge from double-counting a
+    replayed batch.  Complementary to :func:`run_continuous_rollup`'s
+    per-key last_batch (that one scopes partition rewrites; this one is
+    table-snapshot-atomic and gives the rollup time travel).
 
     Scale: input is batch-sized partials; the stored table is
     group-cardinality-sized.  The merge is one union + one hash agg —
     history is never re-aggregated.  Returns False on a replay skip."""
-    from hdfs_stream_processing_spark.operators.incremental import rollup_merge
-    from hdfs_stream_processing_spark.sources.io import (
-        read_table_version,
-        table_latest_version,
-        vacuum_table_versions,
-        write_table_version,
-    )
+    from hdfs_stream_processing_spark.operators import incremental
+    from hdfs_stream_processing_spark.sources.io import apply_versioned_batch
 
-    spark = batch_partial.sparkSession
-    latest = table_latest_version(spark, table_dir)
-    if latest is None:
-        merged = batch_partial.select(*key_cols, *sum_cols)
-    else:
-        existing = read_table_version(spark, table_dir, latest)
-        last_batch = _committed_batch(spark, table_dir, latest, existing)
-        if last_batch is not None and batch_id <= last_batch:
-            return False
-        merged = rollup_merge(
-            existing.drop("_batch"), batch_partial, key_cols, sum_cols
-        )
-    write_table_version(
-        spark,
-        merged.withColumn("_batch", F.lit(batch_id).cast("long")),
-        table_dir,
-        meta={"batch": batch_id},
+    def merge(existing):
+        if existing is None:
+            return batch_partial.select(*key_cols, *sum_cols)
+        return incremental.rollup_merge(existing, batch_partial, key_cols, sum_cols)
+
+    return apply_versioned_batch(
+        batch_partial.sparkSession, table_dir, batch_id, merge
     )
-    vacuum_table_versions(spark, table_dir, keep_last=2)
-    return True
 
 
 def rollup_apply_batch_mixed(
@@ -844,45 +783,26 @@ def rollup_apply_batch_mixed(
     """:func:`rollup_apply_batch` with per-column merge functions
     (sum/min/max via ``rollup_merge_mixed``, round 12) — the variant
     keeper-style state needs (e.g. the streaming substring-scrub
-    keeper min).  Same replay guard: the committed snapshot carries
-    ``_batch`` and a replayed id is skipped, which stays idempotent
-    for min/max exactly as for sums (re-merging a batch would be
-    harmless for min/max but double-counts sums, so the guard is
-    load-bearing whenever the spec mixes them).
+    keeper min).  Commits through
+    :func:`~hdfs_stream_processing_spark.sources.io.apply_versioned_batch`;
+    its replay guard is harmless for min/max and load-bearing whenever
+    the spec has a sum.
 
     Scale: identical to rollup_apply_batch — batch-sized input, one
     union + one hash agg, group-cardinality-sized state."""
     from hdfs_stream_processing_spark.operators.incremental import (
         rollup_merge_mixed,
     )
-    from hdfs_stream_processing_spark.sources.io import (
-        read_table_version,
-        table_latest_version,
-        vacuum_table_versions,
-        write_table_version,
-    )
+    from hdfs_stream_processing_spark.sources.io import apply_versioned_batch
 
-    cols = list(merge_spec)
-    spark = batch_partial.sparkSession
-    latest = table_latest_version(spark, table_dir)
-    if latest is None:
-        merged = batch_partial.select(*key_cols, *cols)
-    else:
-        existing = read_table_version(spark, table_dir, latest)
-        last_batch = _committed_batch(spark, table_dir, latest, existing)
-        if last_batch is not None and batch_id <= last_batch:
-            return False
-        merged = rollup_merge_mixed(
-            existing.drop("_batch"), batch_partial, key_cols, merge_spec
-        )
-    write_table_version(
-        spark,
-        merged.withColumn("_batch", F.lit(batch_id).cast("long")),
-        table_dir,
-        meta={"batch": batch_id},
+    def merge(existing):
+        if existing is None:
+            return batch_partial.select(*key_cols, *merge_spec)
+        return rollup_merge_mixed(existing, batch_partial, key_cols, merge_spec)
+
+    return apply_versioned_batch(
+        batch_partial.sparkSession, table_dir, batch_id, merge
     )
-    vacuum_table_versions(spark, table_dir, keep_last=2)
-    return True
 
 
 def run_stream_rollup_mixed(

@@ -387,7 +387,9 @@ def test_rollup_step_job_budget(spark, tmp_path):
     Spark jobs: the batch partial's shuffle map stage, the merge's
     shuffle map stage, and the snapshot write.  Reading the previous
     snapshot starts none, because its schema comes from the commit
-    sidecar; a footer-inference job there would make it 4."""
+    sidecar; a footer-inference job there would make it 4.  A replay
+    of the same batch starts none: its stamp is read from the sidecar
+    on the driver."""
     from hdfs_stream_processing_spark.streaming.pipeline import rollup_apply_batch
 
     tdir = str(tmp_path / "roll")
@@ -404,8 +406,11 @@ def test_rollup_step_job_budget(spark, tmp_path):
     sc.setJobGroup("rollup_step", "one rollup step on an existing table")
     try:
         assert step(1)
+        n_step = len(sc.statusTracker().getJobIdsForGroup("rollup_step"))
+        assert not step(1)  # replay skip
     finally:
         sc.setJobGroup(None, None)
+    assert n_step == 3
     assert len(sc.statusTracker().getJobIdsForGroup("rollup_step")) == 3
 
 

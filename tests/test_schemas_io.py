@@ -264,6 +264,62 @@ def test_commit_skips_snapshot_orphaned_before_pointer_flip(spark, tmp_path):
     assert sorted(n for n in os.listdir(tdir) if n.startswith("v=")) == ["v=3", "v=4"]
 
 
+def test_commit_recovers_pointer_lost_between_delete_and_rename(spark, tmp_path):
+    """Crash window (b): a crash after the old ``_latest`` is deleted
+    but before ``_latest.tmp`` is renamed over it leaves no pointer.
+    The table must still resolve to the new snapshot from the complete
+    ``_latest.tmp``, so a replay of the committed batch is skipped
+    instead of re-bootstrapping from the batch alone and losing the
+    state; an empty ``_latest.tmp`` alone counts as no pointer."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from hdfs_stream_processing_spark.sources.io import (
+        read_table_version,
+        table_latest_version,
+        write_table_version,
+    )
+    from hdfs_stream_processing_spark.streaming.pipeline import rollup_apply_batch
+
+    def state(tdir):
+        return {
+            r["k"]: r["n"]
+            for r in read_table_version(spark, tdir).drop("_batch").collect()
+        }
+
+    tdir = str(tmp_path / "roll")
+    batch = spark.createDataFrame([("a", 2), ("b", 1)], "k string, n long")
+    assert rollup_apply_batch(batch, tdir, ["k"], ["n"], batch_id=0)
+    assert rollup_apply_batch(batch, tdir, ["k"], ["n"], batch_id=1)
+    # batch 2 crashed after v=3's data, sidecar and _latest.tmp were
+    # written and the old _latest was deleted, before the rename
+    v3 = spark.createDataFrame([("a", 6), ("b", 3)], "k string, n long")
+    assert write_table_version(
+        spark, v3.withColumn("_batch", F.lit(2).cast("long")), tdir,
+        meta={"batch": 2},
+    ) == 3
+    os.rename(f"{tdir}/_latest", f"{tdir}/_latest.tmp")
+    if os.path.exists(f"{tdir}/._latest.crc"):  # local-fs checksum file
+        os.rename(f"{tdir}/._latest.crc", f"{tdir}/._latest.tmp.crc")
+    assert table_latest_version(spark, tdir) == 3
+
+    assert not rollup_apply_batch(batch, tdir, ["k"], ["n"], batch_id=2)
+    assert state(tdir) == {"a": 6, "b": 3}
+    assert rollup_apply_batch(batch, tdir, ["k"], ["n"], batch_id=3)
+    assert table_latest_version(spark, tdir) == 4
+    assert os.path.exists(f"{tdir}/_latest")
+    assert state(tdir) == {"a": 8, "b": 4}
+
+    # a crash inside the first commit's pointer write: empty _latest.tmp
+    fresh = tmp_path / "fresh"
+    fresh.mkdir()
+    (fresh / "_latest.tmp").write_text("")
+    assert table_latest_version(spark, str(fresh)) is None
+    assert rollup_apply_batch(batch, str(fresh), ["k"], ["n"], batch_id=0)
+    assert state(str(fresh)) == {"a": 2, "b": 1}
+
+
 def test_corrupt_json_lines_are_quarantined_not_dropped(spark):
     """PERMISSIVE JSON scan: every malformed line lands in
     _corrupt_record (count preserved), no valid row is lost, and the

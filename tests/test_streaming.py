@@ -844,6 +844,28 @@ def test_stream_golden_split_invariance_and_crash_replay(spark, tmp_path):
     assert golden_of(state) == want
 
 
+def test_stream_golden_state_keeps_last_two_snapshots(spark, tmp_path):
+    """The golden state is vacuumed like every maintained table: after
+    six single-document batches only the last two snapshots remain,
+    and the latest carries the long batch stamp."""
+    import os
+
+    from hdfs_stream_processing_spark.queries_advanced import golden_apply_batch
+    from hdfs_stream_processing_spark.sources.io import read_table_version
+
+    ddl = "doc_id bigint, text string, lang string, source string, n_chars bigint"
+    rows = [
+        (i, f"doc {i} alpha beta gamma delta", "en", "web", 24) for i in range(1, 7)
+    ]
+    state = str(tmp_path / "golden_state")
+    for bid, row in enumerate(rows):
+        assert golden_apply_batch(spark.createDataFrame([row], ddl), state, bid)
+    assert sorted(n for n in os.listdir(state) if n.startswith("v=")) == ["v=5", "v=6"]
+    snap = read_table_version(spark, state)
+    assert dict(snap.dtypes)["_batch"] == "bigint"
+    assert {r[0] for r in snap.select("_batch").distinct().collect()} == {5}
+
+
 def test_stream_ivf_equals_one_shot_assignment(spark):
     """The stream-maintained IVF index (assignments + per-cell counts,
     replay-guarded) must equal the one-shot batch build."""
