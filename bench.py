@@ -1,4 +1,5 @@
-"""Benchmark: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
+"""Benchmark: every registered query at $SPARK_GRAFT_SF_DIR (default sf0.1),
+in registry order.
 
 Prints ONE JSON line:
   {"metric": "...", "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
@@ -50,267 +51,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from hdfs_stream_processing_spark import get_spark
 from hdfs_stream_processing_spark import queries as Q
-
-#: The queries that represent the engine: reference semantics (join,
-#: agg, window, sort, wire, streaming) + LLM-data ops (dedup, similarity,
-#: text).  Trivial identity scans are left out — they time parquet IO,
-#: not the engine.
-HEADLINE = [
-    "multi_join",
-    "group_agg",
-    "rollup_agg",
-    "count_distinct",
-    "window_rank",
-    "window_running",
-    "sort_by_ts",
-    "top_k",
-    "union_rooms",
-    "parse_wire",
-    "json_extract",
-    "text_stats",
-    "doc_fingerprint",
-    "text_ngram",
-    "dedup_exact",
-    "dedup_near",
-    "simhash",
-    "similarity_topk",
-    "similarity_lsh",
-    "multimodal_meta",
-    "stream_ingest",
-    "stream_window_agg",
-    "align_pipeline",
-    "session_agg",
-    "time_rollup",
-    "salted_agg",
-    "text_search",
-    "similarity_topk_np",
-    "asof_join",
-    "range_join",
-    "pivot_wide",
-    "percentiles",
-    "stream_wire_ingest",
-    "stream_stream_join",
-    "sample_hash",
-    "ngram_jaccard",   # shared-shingle join behind the df-cutoff (r3)
-    "ivf_assign",      # literal-centroid codegen argmax, zero shuffle (r3)
-    # round 4 additions — one per newly-evidenced engine path:
-    "similarity_lsh_multiprobe",  # query-side probe fan-out (r4 oracle)
-    "zorder_key",                 # Morton bit-interleave, pure codegen
-    "dedup_clusters",             # iterative min-label propagation
-    "cube_agg",                   # Expand-based multi-grouping
-    "minmax_by",                  # struct-ordered max_by/min_by
-    "approx_distinct_ok",         # HLL + exact side by side
-    # round 4 LLM corpus-curation suite (operators/llmdata.py):
-    "doc_chunk",                  # context-window packing, zero shuffle
-    "decontaminate",              # broadcast benchmark n-gram probe
-    "shard_assign",               # global training-order shuffle
-    "repetition_stats",           # chained hash aggs over n-grams
-    "curate_corpus",              # the whole curation funnel, one plan
-    "stream_curate",              # same curation ops on the stream
-    "gapfill_locf",               # dense spine + IGNORE NULLS carry
-    # round 5: fold in the analytics/statistics suite (VERDICT r4 #8)
-    "sessionize",                 # gaps-and-islands session derivation
-    "funnel",                     # ordered-step conversion funnel
-    "retention",                  # cohort retention matrix (3 shuffles)
-    "anomaly_zscore",             # trailing-window z-score
-    "gapfill_interp",             # linear interpolation across gaps
-    "continuous_rollup",          # foreachBatch additive-merge rollup
-    "large_orders",               # TPC-H Q18 shape: agg→HAVING→join back
-    "heavy_hitters",              # exact top-k frequent per group
-    "ntile_buckets",              # per-type NTILE deciles
-    "corr_qty_price",             # Pearson r from exact integer sums
-    "funnel_lag",                 # p50/p90 time-to-convert per transition
-    "stream_sessionize",          # session_window state across batches
-    # round 5 registrations folded in (r5 landed them after the freeze):
-    "skew_join",                  # salted fact/dim equi-join
-    "cdc_apply",                  # one-window CDC merge
-    "scd2_build",                 # SCD2 history build, one shuffle
-    "snapshot_diff",              # co-partitioned full-outer keyed diff
-    "dq_checks",                  # N rules in one aggregate pass + FK anti-join
-    "stream_dq",                  # same rule list on the unbounded frame
-    # round 6 additions:
-    "scd2_merge",                 # incremental SCD2 maintenance
-    "scd2_multi",                 # multi-attribute SCD2 build
-    "grouping_sets",              # arbitrary multi-granularity Expand agg
-    "stream_enrich",              # stream-static broadcast dim lookup
-    "stream_cdc",                 # foreachBatch tombstone upsert stream
-    "ann_recall",                 # IVF recall@10 vs exact, oracle-hashed
-    "pit_join",                   # point-in-time SCD2 lookup, 1 shuffle
-    "seq_pack",                   # concat-and-split sequence packing
-    "incr_dedup",                 # batch-vs-corpus anti-join dedup
-    "stream_join_outer",          # leftOuter interval join w/ eviction
-    "incr_rollup",                # additive partial-aggregate merge
-    "avg_yearly",                 # TPC-H Q17 decorrelated broadcast plan
-    "stream_pit",                 # stream-static SCD2 interval lookup
-    "dedup_near_incr",            # banded batch-vs-corpus near-dup verify
-    "scd2_repair",                # high-watermark late-arrival repair
-    "incr_topk",                  # top-k from a maintained count table
-    "incr_pack",                  # shard extension from per-shard cursors
-    "incr_dedup_vec",             # bucketed exact-cosine batch dedup
-    "ohlc_bars",                  # min_by/max_by hourly bars, one agg
-    "stream_ohlc",                # same bars as watermarked window agg
-    "stream_daily_rollup",        # chained hourly->daily stateful aggs
-    "dq_quarantine",              # row-level rule routing, zero shuffle
-    "cap_per_source",             # per-domain cap window
-    "merge_upsert",               # declarative MERGE, one full-outer join
-    "time_travel",                # snapshot commit + pointer read + diff
-    # round 6 decision-support (TPC-H-shaped) suite (queries_dss.py):
-    "ship_priority",              # Q3: filtered dims + TakeOrdered top-10
-    "late_ship_priority",         # Q4: EXISTS → left-semi decorrelation
-    "nation_trade",               # Q7: bilateral 6-way join, pruned dims
-    "market_share",               # Q8: conditional cents, one agg pass
-    "returned_revenue",           # Q10: quarter-pruned agg-then-enrich
-    "cust_order_dist",            # Q13: left-join histogram, two aggs
-    "promo_share",                # Q14: promo ratio, single global agg
-    "top_supplier",               # Q15: broadcast scalar max, ties kept
-    "waiting_suppliers",          # Q21: semi+anti on co-partitioned fact
-    "idle_customers",             # Q22: scalar-avg broadcast + anti-join
-    "stream_scd2",                # versioned-snapshot SCD2 maintenance
-    "kmeans_refine",              # exact Lloyd step: codegen assign + 1 agg
-    "embed_quantize",             # int8 min-max quantize, zero shuffle
-    "stream_topk",                # maintained count table + rank read
-    "cms_topk",                   # count-min sketch build + estimate
-    "pagerank",                   # 2 exact fixed-point Pregel rounds
-    "hll_registers",              # open-register HLL, 64-group exchange
-    "bloom_prefilter",            # bloom probe + exact residual semi-join
-    "fuzzy_pairs",                # length-band blocked edit distance
-    "stream_cms",                 # sketch maintained by the stream rollup
-    "sample_weighted",            # PPS priority sampling, portable ranks
-    "hll_by_group",               # per-group registers, one pass
-    "scan_corrupt",               # PERMISSIVE JSON quarantine scan
-    "corr_matrix",                # all pairwise corr, one agg pass
-    "stream_anomaly",             # broadcast-baseline z-score on stream
-    "jaccard_join",               # prefix-filtered exact similarity join
-    "regr_by_group",              # exact-integer OLS sufficient stats
-    "bfs_reach",                  # 3-hop frontier BFS, anti-join visited
-    "vocab_ids",                  # freq-ordered vocab + id sequences
-    "attribution",                # first/last-touch, one window pass
-    "stream_vocab",               # maintained token counts -> vocab ids
-    "purge_keys",                 # GDPR cascade, broadcast-only probes
-    # round 7: remaining TPC-H shapes + the executed purge
-    "local_volume",               # Q5: same-nation join closure in ASIA
-    "forecast_revenue",           # Q6: pure pushdown scan + global agg
-    "product_profit",             # Q9: rev-minus-cost per nation-year
-    "priority_lateness",          # Q12: conditional agg after fact join
-    "disjunct_revenue",           # Q19: OR-of-ANDs implied-filter pushdown
-    "min_cost_supplier",          # Q2: dedup pairs + per-part argmax window
-    "important_parts",            # Q11: scalar-total threshold, exact cents
-    "parts_supplier_counts",      # Q16: anti-join blacklist + distinct count
-    "excess_suppliers",           # Q20: nested semi ladder, agg-then-semi
-    "purge_exec",                 # staged purge cascade + atomic swap + audit
-    # round 7 capability additions:
-    "bucketed_join",              # zero-exchange co-located bucketed join
-    "subject_export",             # GDPR SAR: broadcast probe per hop
-    "scan_text",                  # line-oriented text source round-trip
-    "scan_binary",                # binaryFile shard ingest + md5 digest
-    "ewma_smooth",                # K-lag exact-integer EWMA, one window
-    "tfidf_terms",                # tf-idf top-k, exact-key ranking
-    "containment_join",           # prefix-filtered asymmetric containment
-    "triangle_count",             # oriented wedge-close triangle count
-    "wow_change",                 # calendar-aligned period-over-period
-    "chisq_assoc",                # exact-integer chi-square cells
-    "table_checksum",             # order-free 128-bit content checksum
-    "cluster_coeff",              # per-node ego-density from wedge-close
-    "mad_outliers",               # robust 5xMAD screen, exact percentiles
-    "markov_transitions",         # behavior transition matrix, one window
-    "benford_digits",             # leading-digit fraud/corruption screen
-    "late_profile",               # watermark-delay planning, chunked scan
-    "incr_checksum",              # additive checksum: old + batch delta
-    "stream_checksum",            # checksum maintained by the stream rollup
-    "calendar_rollup",            # zero-filled dense date-spine rollup
-    "dedup_keep_quality",         # policy-based dedup survivor selection
-    "lm_score",                   # unigram LM scoring in integer micro-nats
-    "psi_drift",                  # PSI drift cells from exact counts
-    "interval_peak",              # sweep-line peak interval concurrency
-    "hybrid_rrf",                 # BM25 ∪ vector-cosine RRF fusion
-    "rolling_actives",            # sliding 7-day COUNT DISTINCT via explode
-    "stream_actives",             # maintained (day,user) presence table
-    "golden_record",              # per-attribute survivorship merge
-    "incr_golden",                # component-contraction golden maintenance
-    # round 8 (VERDICT r7 #8): the previously-unbenched tail — every
-    # registered query is now in the headline set, so the bench IS the
-    # registry (tests/test_bench_compare.py pins the equality; a new
-    # query cannot land unbenched)
-    "scan_parquet", "scan_csv", "scan_json", "scan_orc",
-    "project_exclude", "add_lit", "drop_nulls", "case_when", "limit_n",
-    "to_wire", "epoch_to_ts", "count_rows", "approx_distinct",
-    "quality_score", "lang_id", "token_count", "minhash_sig",
-    "join_outer", "join_semi", "join_anti", "set_ops", "except_op",
-    "sink_roundtrip", "compaction", "upsert", "schema_evolution",
-    "dedup_embedding", "dedup_keep", "similarity_ivf",
-    "multimodal_features", "multimodal_frames",
-    "unpivot_narrow", "fill_nulls", "regex_extract", "profile_table",
-    "histogram", "sample_stratified", "string_agg_sorted",
-    "window_time_range", "revenue_share", "approx_quantile_ok",
-    "asof_forward", "asof_tolerance", "text_rank_bm25", "text_phrase",
-    "pii_redact", "mix_sources", "resample_sources",
-    "stream_dedup", "stream_dedup_wm", "stream_stateful",
-    "stream_quarantine", "stream_golden",
-    # round 8: boilerplate/entropy/LM/zipf text ops, IVM delta join and
-    # retraction merge, basket rules, RFM, HLL intersection contract
-    "chunk_dedup", "entropy_profile", "bigram_lm", "token_zipf",
-    "incr_join", "incr_retract", "basket_rules", "rfm_segments",
-    "hll_intersect", "minhash_recall", "winsorize_prices",
-    "stream_retract", "attribution_linear", "cohort_ltv",
-    "oov_rate", "stream_chunk_dedup",
-    # round 9: real BMP decode/resize (last stubs closed), BPE
-    # tokenizer-training steps, streaming IVF maintenance
-    "image_decode", "image_resize", "bpe_merge", "bpe_apply",
-    "stream_ivf", "bpe_train", "pq_assign", "stream_bpe_merge",
-    "stream_image_meta", "pq_topk", "bpe_encode", "pq_recall",
-    # round 10: cell-pruned residual IVF-PQ, streaming PQ codes,
-    # clustered recall contracts, deep BPE training, PPM + crop/flip
-    "ivfpq_topk", "ivfpq_recall", "pq_recall_clustered", "stream_pq",
-    "bpe_train_deep", "image_decode_ppm", "image_flip", "image_crop",
-    "stream_ivfpq", "audio_decode", "audio_resample", "ivfpq_rerank",
-    "stream_audio_meta", "image_normalize",
-    # round 11: substring-level exact dedup + scrub, OPQ-lite rotation,
-    # stereo WAV + downmix, framed audio features
-    "substring_dup", "substring_scrub", "pq_rotate",
-    "audio_stereo_stats", "audio_downmix", "audio_frames",
-    # round-11 second/third wave:
-    "kcore",
-    "k_anonymity",
-    "audio_autocorr",
-    "image_histogram",
-    "stream_substring_dedup",
-    "audio_pitch",
-    "train_split",
-    "stream_k_anonymity",
-    # round-11 fourth wave:
-    "image_grayscale",
-    "audio_vad",
-    "degree_hist",
-    # round 12: perceptual near-dup (image dHash, audio sign-delta),
-    # label-propagation communities, streaming substring scrub
-    "image_phash",
-    "image_dedup_near",
-    "audio_fingerprint",
-    "audio_dedup_near",
-    "communities",
-    "stream_substring_scrub",
-    # round-12 second wave: dedup keep-actions + streaming dedup index
-    "image_dedup_keep",
-    "audio_dedup_keep",
-    "stream_image_dedup",
-    # round 13: compressed-format decode + streaming communities +
-    # the audio streaming-dedup twin
-    "image_decode_png",
-    "stream_communities",
-    "stream_audio_dedup",
-    # round 14: baseline-JPEG decode + the lossy re-encode dedup twin
-    # + the combinatorial-probe matcher parameterization
-    "image_decode_jpeg",
-    "image_dedup_jpeg",
-    "image_dedup_combo",
-    "image_decode_gif",
-    "audio_decode_adpcm",
-    "audio_dedup_adpcm",
-    "scan_gzip",
-    "scan_warc",
-    "image_decode_jpeg_prog",
-    "scan_compressed",
-]
 
 
 def extract_prev_mins(prev_data: dict) -> dict[str, float]:
@@ -601,7 +341,7 @@ def main() -> None:
     # cannot see a mid-window burst.  Probe every ~1/8th of the sweep;
     # the gate takes the WORST checkpoint.
     sentinels_mid: list[float] = []
-    run_list = subset if subset is not None else HEADLINE
+    run_list = subset if subset is not None else list(Q.QUERIES)
     mid_every = max(1, len(run_list) // 8)
     # per-block session restarts (r9): a single 244-query × 8-run
     # session accumulates harness state (state-store providers, GC

@@ -292,15 +292,6 @@ def dedup_near_incremental(
     )
 
 
-def md5_hash64(col: Column, seed: int) -> Column:
-    """Deterministic 32-bit hash from md5 — engine-portable (md5 is
-    byte-identical in Spark, DuckDB, and every other engine; Spark's
-    native ``hash``/``xxhash64`` are not portable)."""
-    return F.conv(F.substring(F.md5(F.concat(F.lit(f"{seed}:"), col)), 1, 8), 16, 10).cast(
-        "long"
-    )
-
-
 def shingle_rows(
     df: DataFrame, id_col: str, text_col: str, n: int = 2, distinct: bool = True
 ) -> DataFrame:

@@ -43,14 +43,6 @@ def ascii_fold(col: Column | str) -> Column:
     return F.translate(F.regexp_replace(c, "ß", "ss"), FOLD_SRC, FOLD_DST)
 
 
-def analyzer_tokens(col: Column | str, sep: str = " ") -> Column:
-    """The full ES analyzer normalization: lowercase → asciifolding →
-    whitespace tokenize.  Used by the index/search path so accented text
-    tokenizes exactly as the reference's search index would."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.split(ascii_fold(F.lower(c)), sep)
-
-
 def explode_edge_ngrams(
     df: DataFrame, id_col: str, text_col: str, min_gram: int = 2, max_gram: int = 10
 ) -> DataFrame:

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from hdfs_stream_processing_spark.queries import (  # noqa: F401
     ORACLES,
     _mkdtemp,
-    _STAGE_CACHE,
+    _stage_once,
     prep,
     query,
 )
@@ -431,27 +431,25 @@ def q_train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stage_qid_orders(spark: SparkSession, sf_dir: str) -> tuple[str, "object"]:
-    """Stage the QID-projected orders (priority, status, year, month,
-    custkey) as a streaming source directory — year/month extracted
-    BEFORE staging so the staged files carry plain ints (the streaming
-    path exercises rollup maintenance, not timestamp decoding, which
-    sources/io.load_table already owns).  Memoized per sf_dir."""
-    key = (sf_dir, "qid_orders")
+def _qid_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The QID-projected orders (priority, status, year, month,
+    custkey) — year/month extracted here, so a staged copy carries plain
+    ints (the streaming path exercises rollup maintenance, not timestamp
+    decoding, which sources/io.load_table already owns)."""
     (orders,) = prep(spark, sf_dir, "orders")
-    prepared = orders.select(
+    return orders.select(
         "o_orderpriority",
         "o_orderstatus",
         F.year("o_orderdate").cast("int").alias("o_year"),
         F.month("o_orderdate").cast("int").alias("o_month"),
         "o_custkey",
     )
-    if key in _STAGE_CACHE:
-        return _STAGE_CACHE[key], prepared.schema
-    stage_dir = _mkdtemp("hsp_stream_qidsrc_")
-    prepared.repartition(4).write.mode("overwrite").parquet(stage_dir)
-    _STAGE_CACHE[key] = stage_dir
-    return stage_dir, prepared.schema
+
+
+@_stage_once
+def _stage_qid_orders(out: str, spark: SparkSession, sf_dir: str) -> None:
+    """The QID-projected orders as a streaming source directory."""
+    _qid_orders(spark, sf_dir).repartition(4).write.mode("overwrite").parquet(out)
 
 
 @query("stream_k_anonymity", None)  # oracle assigned below: k_anonymity's
@@ -469,8 +467,10 @@ def q_stream_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hdfs_stream_processing_spark.streaming import stream_parquet_source
     from hdfs_stream_processing_spark.streaming.pipeline import run_stream_rollup
 
-    src_dir, schema = _stage_qid_orders(spark, sf_dir)
-    stream = stream_parquet_source(spark, src_dir, schema, max_files_per_trigger=2)
+    schema = _qid_orders(spark, sf_dir).schema
+    stream = stream_parquet_source(
+        spark, _stage_qid_orders(spark, sf_dir), schema, max_files_per_trigger=2
+    )
     qid = ["o_orderpriority", "o_orderstatus", "o_year", "o_month"]
 
     def partial(df: DataFrame) -> DataFrame:

@@ -24,9 +24,9 @@ from hdfs_stream_processing_spark.queries import (  # noqa: F401
     _NORM_SQL,
     _PAIRS_SQL,
     _QUANT_SQL,
-    _STAGE_CACHE,
     _mkdtemp,
     _stage_events,
+    _stage_once,
     cents_avg,
     cents_sum,
     prep,
@@ -36,6 +36,7 @@ from hdfs_stream_processing_spark.queries import (  # noqa: F401
     sql_fold,
 )
 from hdfs_stream_processing_spark.queries_llmdata import _stage_documents  # noqa: F401
+from hdfs_stream_processing_spark.sources.io import load_table
 
 # Round 6 (cont.): point-in-time join, sequence packing, incremental
 # dedup, outer stream-stream join
@@ -1102,11 +1103,10 @@ def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 from hdfs_stream_processing_spark import queries_dss  # noqa: E402,F401
 
 
-def _stage_events_time_ordered(
-    spark: SparkSession, sf_dir: str, n_files: int = 3
-) -> tuple[str, "T.StructType"]:
+@_stage_once
+def _stage_events_time_ordered(out: str, spark: SparkSession, sf_dir: str) -> None:
     """Stage the events table as a streaming source whose files arrive
-    in EVENT-TIME order: file i holds a contiguous ts range strictly
+    in EVENT-TIME order (3 files): file i holds a contiguous ts range strictly
     before file i+1's (cutpoints = exact ts percentiles; events ts is
     unique in the driver data).  File mtimes are stamped increasing so
     the file source's oldest-first ordering is deterministic, and
@@ -1118,13 +1118,8 @@ def _stage_events_time_ordered(
     import os as _os
     import time as _time
 
-    from pyspark.sql import types as T  # noqa: F401
-
-    key = ("hsp_stream_ordsrc_", (sf_dir, n_files))
-    (events,) = prep(spark, sf_dir, "events")
-    if key in _STAGE_CACHE:
-        return _STAGE_CACHE[key], events.schema
-    stage_dir = _mkdtemp("hsp_stream_ordsrc_")
+    events = load_table(spark, sf_dir, "events")
+    n_files = 3
     fracs = [i / n_files for i in range(1, n_files)]
     (cuts,) = (
         events.agg(
@@ -1144,14 +1139,12 @@ def _stage_events_time_ordered(
             cond = cond & (F.unix_micros("ts") > F.lit(bounds[i]))
         if bounds[i + 1] is not None:
             cond = cond & (F.unix_micros("ts") <= F.lit(bounds[i + 1]))
-        events.where(cond).coalesce(1).write.mode("append").parquet(stage_dir)
-        for f in _os.listdir(stage_dir):
-            p = _os.path.join(stage_dir, f)
+        events.where(cond).coalesce(1).write.mode("append").parquet(out)
+        for f in _os.listdir(out):
+            p = _os.path.join(out, f)
             if f.endswith(".parquet") and p not in stamped:
                 _os.utime(p, (base + i, base + i))
                 stamped.add(p)
-    _STAGE_CACHE[key] = stage_dir
-    return stage_dir, events.schema
 
 
 @query(
@@ -1186,8 +1179,9 @@ def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_stream_scd2,
     )
 
-    src_dir, schema = _stage_events_time_ordered(spark, sf_dir, n_files=3)
-    stream = stream_parquet_source(spark, src_dir, schema, max_files_per_trigger=1)
+    (events,) = prep(spark, sf_dir, "events")
+    src_dir = _stage_events_time_ordered(spark, sf_dir)
+    stream = stream_parquet_source(spark, src_dir, events.schema, max_files_per_trigger=1)
     log = stream.select("user_id", "ts", "event_id", "event_type")
     tdir = _mkdtemp("hsp_sscd2_")
     ckpt = _mkdtemp("hsp_sscd2_ckpt_")
@@ -1678,6 +1672,24 @@ def q_hll_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hll_grouped_registers(events, "user_id", ["event_type"], b=4)
 
 
+@_stage_once
+def _stage_corrupt_json(out: str, spark: SparkSession, sf_dir: str) -> None:
+    """Events as JSON lines, every 7th id truncated mid-object."""
+    base = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
+    good = base.where(F.col("event_id") % 7 != 0).select(
+        F.to_json(F.struct("event_id", "user_id", "value")).alias("value")
+    )
+    bad = base.where(F.col("event_id") % 7 == 0).select(
+        F.concat(
+            F.lit('{"event_id": '),
+            F.col("event_id").cast("string"),
+            F.lit(', "user_'),
+        ).alias("value")
+    )
+    good.write.mode("append").text(out)
+    bad.write.mode("append").text(out)
+
+
 @query(
     "scan_corrupt",
     """SELECT event_id, user_id, value FROM events
@@ -1699,25 +1711,8 @@ def q_scan_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     real feed contains."""
     from pyspark.sql import types as T
 
-    (events,) = prep(spark, sf_dir, "events")
-    stage = _mkdtemp("hsp_corrupt_", memo_key=sf_dir)
-    import os as _os
-
-    if not _os.path.exists(_os.path.join(stage, "_staged")):
-        base = events.select("event_id", "user_id", "value")
-        good = base.where(F.col("event_id") % 7 != 0).select(
-            F.to_json(F.struct("event_id", "user_id", "value")).alias("value")
-        )
-        bad = base.where(F.col("event_id") % 7 == 0).select(
-            F.concat(
-                F.lit('{"event_id": '),
-                F.col("event_id").cast("string"),
-                F.lit(', "user_'),
-            ).alias("value")
-        )
-        good.write.mode("append").text(stage)
-        bad.write.mode("append").text(stage)
-        open(_os.path.join(stage, "_staged"), "w").close()
+    prep(spark, sf_dir, "events")
+    stage = _stage_corrupt_json(spark, sf_dir)
     schema = T.StructType(
         [
             T.StructField("event_id", T.LongType()),
@@ -1862,13 +1857,11 @@ def q_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ========================================================================
 
 
-def _stage_enriched_view(spark: SparkSession, sf_dir: str) -> str:
+@_stage_once
+def _stage_enriched_view(out: str, spark: SparkSession, sf_dir: str) -> None:
     """Materialize the OLD orders⋈customer view (both sides minus their
     incoming deltas) to parquet once per sf_dir — the fixture for
     ``incr_join``: maintenance must READ this, never recompute it."""
-    key = (sf_dir, "enriched_view_old")
-    if key in _STAGE_CACHE:
-        return _STAGE_CACHE[key]
     orders, customer = prep(spark, sf_dir, "orders", "customer")
     o_old = orders.where(F.col("o_orderkey") % 7 != 0)
     c_old = customer.where(F.col("c_custkey") % 5 != 0)
@@ -1878,10 +1871,7 @@ def _stage_enriched_view(spark: SparkSession, sf_dir: str) -> str:
         .select("o_orderkey", F.col("o_custkey").alias("c_custkey"), "price_cents")
         .join(c_old.select("c_custkey", "c_name", "c_mktsegment"), "c_custkey")
     )
-    out = _mkdtemp("hsp_view_old_")
     view.write.mode("overwrite").parquet(out)
-    _STAGE_CACHE[key] = out
-    return out
 
 
 @query(
@@ -1969,15 +1959,10 @@ def q_incr_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stage_cdc_orders(spark: SparkSession, sf_dir: str) -> tuple[str, "object"]:
-    """Stage the orders CDC log as a streaming source: the base state
-    as inserts plus the change batch (inserts %10==7 are already in the
-    table rows; updates %10==8 add $10; deletes %10==9) — one parquet
-    dir, several files so availableNow delivers multiple micro-batches.
-    Memoized per sf_dir."""
-    key = (sf_dir, "cdc_orders")
-    if key in _STAGE_CACHE:
-        return _STAGE_CACHE[key]
+def _cdc_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The orders CDC log: the base state as inserts plus the change
+    batch (inserts %10==7 are already in the table rows; updates %10==8
+    add $10; deletes %10==9)."""
     (orders,) = prep(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * F.lit(100.0), 0).cast("long")
     d = F.col("o_orderkey") % 10
@@ -1993,12 +1978,14 @@ def _stage_cdc_orders(spark: SparkSession, sf_dir: str) -> tuple[str, "object"]:
         F.when(d == 7, cents).when(d == 8, cents + F.lit(1000)).alias("new_val"),
         F.when(d != 7, cents).alias("old_val"),
     )
-    log = base.unionByName(changes)
-    stage_dir = _mkdtemp("hsp_cdc_src_")
-    log.repartition(4).write.mode("overwrite").parquet(stage_dir)
-    out = (stage_dir, log.schema)
-    _STAGE_CACHE[key] = out
-    return out
+    return base.unionByName(changes)
+
+
+@_stage_once
+def _stage_cdc_orders(out: str, spark: SparkSession, sf_dir: str) -> None:
+    """The orders CDC log as a streaming source: one parquet dir, several
+    files so availableNow delivers multiple micro-batches."""
+    _cdc_orders(spark, sf_dir).repartition(4).write.mode("overwrite").parquet(out)
 
 
 @query(
@@ -2028,8 +2015,10 @@ def q_stream_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hdfs_stream_processing_spark.streaming import stream_parquet_source
     from hdfs_stream_processing_spark.streaming.pipeline import run_stream_rollup
 
-    src_dir, schema = _stage_cdc_orders(spark, sf_dir)
-    stream = stream_parquet_source(spark, src_dir, schema, max_files_per_trigger=2)
+    schema = _cdc_orders(spark, sf_dir).schema
+    stream = stream_parquet_source(
+        spark, _stage_cdc_orders(spark, sf_dir), schema, max_files_per_trigger=2
+    )
 
     def partial(df: DataFrame) -> DataFrame:
         op = F.col("op")

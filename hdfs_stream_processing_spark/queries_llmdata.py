@@ -18,9 +18,11 @@ from hdfs_stream_processing_spark.queries import (  # noqa: F401
     TS_FMT_SPARK,
     _conf_override,
     _QUANT_SQL,
-    _STAGE_CACHE,
     _mkdtemp,
     _stage_events,
+    _stage_once,
+    _stage_table,
+    _write_per_source,
     cents_avg,
     cents_sum,
     prep,
@@ -29,6 +31,7 @@ from hdfs_stream_processing_spark.queries import (  # noqa: F401
     sql_cents_sum,
     sql_fold,
 )
+from hdfs_stream_processing_spark.sources.io import load_table
 
 # §LLM corpus curation (operators/llmdata.py) — chunking, PII redaction,
 # decontamination, mixing, sharding, repetition gates
@@ -319,18 +322,11 @@ def q_resample_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stage_documents(spark: SparkSession, sf_dir: str, n_files: int = 4) -> tuple[str, "object"]:
-    """Stage the documents table as a streaming source directory (same
-    file-source + availableNow stand-in contract as ``_stage_events``).
-    Memoized per sf_dir."""
-    key = (sf_dir, "documents")
+def _stage_documents(spark: SparkSession, sf_dir: str) -> tuple[str, "object"]:
+    """The documents table as a staged streaming source (same
+    file-source + availableNow stand-in contract as ``_stage_events``)."""
     (documents,) = prep(spark, sf_dir, "documents")
-    if key in _STAGE_CACHE:
-        return _STAGE_CACHE[key], documents.schema
-    stage_dir = _mkdtemp("hsp_stream_docsrc_")
-    documents.repartition(n_files).write.mode("overwrite").parquet(stage_dir)
-    _STAGE_CACHE[key] = stage_dir
-    return stage_dir, documents.schema
+    return _stage_table(spark, sf_dir, "documents", 1), documents.schema
 
 
 @query(
@@ -458,6 +454,15 @@ def q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_stage_once
+def _stage_evolving_events(out: str, spark: SparkSession, sf_dir: str) -> None:
+    """Events split into 'old' files (even ids, no ``event_type``) and
+    'new' files (odd ids, with it) in one dir."""
+    base = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value", "event_type")
+    base.where(F.col("event_id") % 2 == 0).drop("event_type").write.mode("append").parquet(out)
+    base.where(F.col("event_id") % 2 == 1).write.mode("append").parquet(out)
+
+
 @query(
     "schema_evolution",
     """SELECT event_id, user_id, value,
@@ -473,17 +478,8 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle mirrors that split over the base table.  This is the
     append-only reality of a years-deep lake: adding a column must not
     require rewriting history."""
-    (events,) = prep(spark, sf_dir, "events")
-    stage = _mkdtemp("hsp_evolve_", memo_key=sf_dir)
-    import os as _os
-
-    if not _os.path.exists(_os.path.join(stage, "_staged")):
-        base = events.select("event_id", "user_id", "value", "event_type")
-        old = base.where(F.col("event_id") % 2 == 0).drop("event_type")
-        new = base.where(F.col("event_id") % 2 == 1)
-        old.write.mode("append").parquet(stage)
-        new.write.mode("append").parquet(stage)
-        open(_os.path.join(stage, "_staged"), "w").close()
+    prep(spark, sf_dir, "events")
+    stage = _stage_evolving_events(spark, sf_dir)
     return spark.read.option("mergeSchema", "true").parquet(stage).select(
         "event_id", "user_id", "value", "event_type"
     )
@@ -983,28 +979,20 @@ def _synth_image(n: int, w: int, h: int):
     ).astype(np.uint8)
 
 
-def _stage_bmp_shards(spark: SparkSession, sf_dir: str) -> str:
+@_stage_once
+def _stage_bmp_shards(out: str, spark: SparkSession, sf_dir: str) -> None:
     """One BMP per document source (sources are ``src{n}``): dims and
     pixels derive from n alone, so DuckDB can recompute the expected
     decode output without ever seeing the binary.  Widths 11..17 cover
     every row-padding case (3·W mod 4 ∈ {0,1,2,3}); driver work is
     bounded by the source count (20), not the corpus."""
-    import os as _os
-
     from hdfs_stream_processing_spark.operators.multimodal import encode_bmp
 
-    key = ("hsp_bmp_staged_", sf_dir)
-    if key in _STAGE_CACHE:
-        return _STAGE_CACHE[key]
-    (documents,) = prep(spark, sf_dir, "documents")
-    img_dir = _mkdtemp("hsp_bmp_src_", sf_dir)
-    for row in documents.select("source").distinct().collect():
-        n = int(row["source"][3:])
+    def files(n: int) -> dict[str, bytes]:
         arr = _synth_image(n, 11 + n % 7, 6 + n % 5)
-        with open(_os.path.join(img_dir, f"{row['source']}.bmp"), "wb") as f:
-            f.write(encode_bmp(arr))
-    _STAGE_CACHE[key] = img_dir
-    return img_dir
+        return {".bmp": encode_bmp(arr)}
+
+    _write_per_source(spark, sf_dir, out, files)
 
 
 #: Shared oracle scaffold: regenerate every pixel of every staged image
@@ -1270,17 +1258,11 @@ def q_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ========================================================================
 
 
-def _stage_embeddings(spark: SparkSession, sf_dir: str, n_files: int = 4) -> tuple[str, "object"]:
-    """Stage the embeddings table as a streaming source directory (same
-    contract as ``_stage_documents``).  Memoized per sf_dir."""
-    key = (sf_dir, "embeddings")
+def _stage_embeddings(spark: SparkSession, sf_dir: str) -> tuple[str, "object"]:
+    """The embeddings table as a staged streaming source (same contract
+    as ``_stage_documents``)."""
     (embeddings,) = prep(spark, sf_dir, "embeddings")
-    if key in _STAGE_CACHE:
-        return _STAGE_CACHE[key], embeddings.schema
-    stage_dir = _mkdtemp("hsp_stream_embsrc_")
-    embeddings.repartition(n_files).write.mode("overwrite").parquet(stage_dir)
-    _STAGE_CACHE[key] = stage_dir
-    return stage_dir, embeddings.schema
+    return _stage_table(spark, sf_dir, "embeddings", 1), embeddings.schema
 
 
 @query(
@@ -2310,53 +2292,37 @@ def q_bpe_train_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ========================================================================
 
 
-def _stage_ppm_shards(spark: SparkSession, sf_dir: str) -> str:
+@_stage_once
+def _stage_ppm_shards(out: str, spark: SparkSession, sf_dir: str) -> None:
     """PPM twin of _stage_bmp_shards: the SAME synthetic per-source
     pixels, encoded as binary P6 instead of BMP — so the decode oracle
     is image_decode's verbatim, and a dispatch bug (stride, row order,
     channel order differ in every axis between the two formats) breaks
     the hash."""
-    import os as _os
-
     from hdfs_stream_processing_spark.operators.multimodal import encode_ppm
 
-    key = ("hsp_ppm_staged_", sf_dir)
-    if key in _STAGE_CACHE:
-        return _STAGE_CACHE[key]
-    (documents,) = prep(spark, sf_dir, "documents")
-    img_dir = _mkdtemp("hsp_ppm_src_", sf_dir)
-    for row in documents.select("source").distinct().collect():
-        n = int(row["source"][3:])
+    def files(n: int) -> dict[str, bytes]:
         arr = _synth_image(n, 11 + n % 7, 6 + n % 5)
-        with open(_os.path.join(img_dir, f"{row['source']}.ppm"), "wb") as f:
-            f.write(encode_ppm(arr))
-    _STAGE_CACHE[key] = img_dir
-    return img_dir
+        return {".ppm": encode_ppm(arr)}
+
+    _write_per_source(spark, sf_dir, out, files)
 
 
-def _stage_png_shards(spark: SparkSession, sf_dir: str) -> str:
+@_stage_once
+def _stage_png_shards(out: str, spark: SparkSession, sf_dir: str) -> None:
     """PNG twin of _stage_bmp_shards (r13, VERDICT r12 #3): the SAME
     synthetic per-source pixels, encoded as 8-bit truecolor PNG via
     the stdlib-zlib codec with the row % 5 filter cycle — one staged
     file exercises all five unfilter paths (None/Sub/Up/Average/Paeth)
     in the production decode.  Decode oracle is image_decode's
     verbatim: a deflate, unfilter, or dispatch bug breaks the hash."""
-    import os as _os
-
     from hdfs_stream_processing_spark.operators.multimodal import encode_png
 
-    key = ("hsp_png_staged_", sf_dir)
-    if key in _STAGE_CACHE:
-        return _STAGE_CACHE[key]
-    (documents,) = prep(spark, sf_dir, "documents")
-    img_dir = _mkdtemp("hsp_png_src_", sf_dir)
-    for row in documents.select("source").distinct().collect():
-        n = int(row["source"][3:])
+    def files(n: int) -> dict[str, bytes]:
         arr = _synth_image(n, 11 + n % 7, 6 + n % 5)
-        with open(_os.path.join(img_dir, f"{row['source']}.png"), "wb") as f:
-            f.write(encode_png(arr))
-    _STAGE_CACHE[key] = img_dir
-    return img_dir
+        return {".png": encode_png(arr)}
+
+    _write_per_source(spark, sf_dir, out, files)
 
 
 def _decoded_shards(
@@ -2425,7 +2391,8 @@ def q_image_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLES["image_decode_png"] = ORACLES["image_decode"]
 
 
-def _stage_jpeg_prog_shards(spark: SparkSession, sf_dir: str) -> str:
+@_stage_once
+def _stage_jpeg_prog_shards(out: str, spark: SparkSession, sf_dir: str) -> None:
     """PROGRESSIVE twin of _stage_jpeg_shards (r14 second wave): the
     identical DC-exact tile pixels encoded as SOF2 — DC
     successive-approximation scans (first at Al=1, then the
@@ -2434,19 +2401,11 @@ def _stage_jpeg_prog_shards(spark: SparkSession, sf_dir: str) -> str:
     Because progression only reorders transmission, the decode must
     equal the baseline shards bit-for-bit, so the oracle is
     image_decode_jpeg's verbatim."""
-    import os as _os
-
     import numpy as np
 
     from hdfs_stream_processing_spark.operators.multimodal import encode_jpeg
 
-    key = ("hsp_jpegprog_staged_", sf_dir)
-    if key in _STAGE_CACHE:
-        return _STAGE_CACHE[key]
-    (documents,) = prep(spark, sf_dir, "documents")
-    img_dir = _mkdtemp("hsp_jpegprog_src_", sf_dir)
-    for row in documents.select("source").distinct().collect():
-        n = int(row["source"][3:])
+    def files(n: int) -> dict[str, bytes]:
         wt, ht = 2 + n % 3, 2 + n % 2
         bx = np.arange(wt, dtype=np.int64)[None, :]
         by = np.arange(ht, dtype=np.int64)[:, None]
@@ -2456,12 +2415,9 @@ def _stage_jpeg_prog_shards(spark: SparkSession, sf_dir: str) -> str:
         )
         tiles = np.repeat(np.repeat(v, 8, axis=0), 8, axis=1).astype(np.uint8)
         arr = np.stack([tiles, tiles, tiles], axis=-1)
-        with open(_os.path.join(img_dir, f"{row['source']}.jpg"), "wb") as f:
-            f.write(
-                encode_jpeg(arr, quality=50, grayscale=True, progressive=True)
-            )
-    _STAGE_CACHE[key] = img_dir
-    return img_dir
+        return {".jpg": encode_jpeg(arr, quality=50, grayscale=True, progressive=True)}
+
+    _write_per_source(spark, sf_dir, out, files)
 
 
 @query("image_decode_jpeg_prog", None)  # oracle assigned below
@@ -2505,7 +2461,8 @@ def q_image_decode_jpeg_prog(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-def _stage_gif_shards(spark: SparkSession, sf_dir: str) -> str:
+@_stage_once
+def _stage_gif_shards(out: str, spark: SparkSession, sf_dir: str) -> None:
     """GIF twin of _stage_png_shards (r14): the SAME synthetic
     per-source pixels (≤ 187 distinct colors — inside GIF's 256-color
     contract by construction), palette-quantized and LZW-coded; ODD
@@ -2513,22 +2470,13 @@ def _stage_gif_shards(spark: SparkSession, sf_dir: str) -> str:
     the production decode.  Lossless, so the decode oracle is
     image_decode's verbatim — a palette, LZW, sub-block, or interlace
     bug breaks the hash."""
-    import os as _os
-
     from hdfs_stream_processing_spark.operators.multimodal import encode_gif
 
-    key = ("hsp_gif_staged_", sf_dir)
-    if key in _STAGE_CACHE:
-        return _STAGE_CACHE[key]
-    (documents,) = prep(spark, sf_dir, "documents")
-    img_dir = _mkdtemp("hsp_gif_src_", sf_dir)
-    for row in documents.select("source").distinct().collect():
-        n = int(row["source"][3:])
+    def files(n: int) -> dict[str, bytes]:
         arr = _synth_image(n, 11 + n % 7, 6 + n % 5)
-        with open(_os.path.join(img_dir, f"{row['source']}.gif"), "wb") as f:
-            f.write(encode_gif(arr, interlace=bool(n % 2)))
-    _STAGE_CACHE[key] = img_dir
-    return img_dir
+        return {".gif": encode_gif(arr, interlace=bool(n % 2))}
+
+    _write_per_source(spark, sf_dir, out, files)
 
 
 @query("image_decode_gif", None)  # oracle assigned below: image_decode's
@@ -2552,7 +2500,8 @@ def q_image_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLES["image_decode_gif"] = ORACLES["image_decode"]
 
 
-def _stage_jpeg_shards(spark: SparkSession, sf_dir: str) -> str:
+@_stage_once
+def _stage_jpeg_shards(out: str, spark: SparkSession, sf_dir: str) -> None:
     """Baseline-JPEG shards whose decode is BIT-EXACT (r14, VERDICT r13
     #3): per-source grayscale images tiled in 8×8-aligned constant
     blocks with EVEN values — at quality 50 the Annex-K luminance DC
@@ -2564,19 +2513,11 @@ def _stage_jpeg_shards(spark: SparkSession, sf_dir: str) -> str:
     verification of the marker walk, Huffman decode, dequant, and
     IDCT.  Encoded via encode_jpeg(grayscale=True), one component,
     decoded through the same decode_payload dispatch as any JPEG."""
-    import os as _os
-
     import numpy as np
 
     from hdfs_stream_processing_spark.operators.multimodal import encode_jpeg
 
-    key = ("hsp_jpeg_staged_", sf_dir)
-    if key in _STAGE_CACHE:
-        return _STAGE_CACHE[key]
-    (documents,) = prep(spark, sf_dir, "documents")
-    img_dir = _mkdtemp("hsp_jpeg_src_", sf_dir)
-    for row in documents.select("source").distinct().collect():
-        n = int(row["source"][3:])
+    def files(n: int) -> dict[str, bytes]:
         wt, ht = 2 + n % 3, 2 + n % 2
         bx = np.arange(wt, dtype=np.int64)[None, :]
         by = np.arange(ht, dtype=np.int64)[:, None]
@@ -2586,10 +2527,9 @@ def _stage_jpeg_shards(spark: SparkSession, sf_dir: str) -> str:
         )
         tiles = np.repeat(np.repeat(v, 8, axis=0), 8, axis=1).astype(np.uint8)
         arr = np.stack([tiles, tiles, tiles], axis=-1)
-        with open(_os.path.join(img_dir, f"{row['source']}.jpg"), "wb") as f:
-            f.write(encode_jpeg(arr, quality=50, grayscale=True))
-    _STAGE_CACHE[key] = img_dir
-    return img_dir
+        return {".jpg": encode_jpeg(arr, quality=50, grayscale=True)}
+
+    _write_per_source(spark, sf_dir, out, files)
 
 
 @query(
@@ -2806,26 +2746,17 @@ def _synth_wave(n: int, length: int):
     return (((7 * i + 3 * n) % 401) - 200).astype(np.int16)
 
 
-def _stage_wav_shards(spark: SparkSession, sf_dir: str) -> str:
+@_stage_once
+def _stage_wav_shards(out: str, spark: SparkSession, sf_dir: str) -> None:
     """One WAV per document source: lengths 50..66 (from n alone), rate
     8000 — the audio twin of _stage_bmp_shards; driver work is bounded
     by the source count, and DuckDB recomputes the expected decode
     without ever seeing the binary."""
-    import os as _os
-
     from hdfs_stream_processing_spark.operators.multimodal import encode_wav
 
-    key = ("hsp_wav_staged_", sf_dir)
-    if key in _STAGE_CACHE:
-        return _STAGE_CACHE[key]
-    (documents,) = prep(spark, sf_dir, "documents")
-    wav_dir = _mkdtemp("hsp_wav_src_", sf_dir)
-    for row in documents.select("source").distinct().collect():
-        n = int(row["source"][3:])
-        with open(_os.path.join(wav_dir, f"{row['source']}.wav"), "wb") as f:
-            f.write(encode_wav(_synth_wave(n, 50 + n % 17), 8000))
-    _STAGE_CACHE[key] = wav_dir
-    return wav_dir
+    _write_per_source(
+        spark, sf_dir, out, lambda n: {".wav": encode_wav(_synth_wave(n, 50 + n % 17), 8000)}
+    )
 
 
 def _decoded_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2884,7 +2815,8 @@ def q_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stage_adpcm_shards(spark: SparkSession, sf_dir: str) -> str:
+@_stage_once
+def _stage_adpcm_shards(out: str, spark: SparkSession, sf_dir: str) -> None:
     """IMA-ADPCM WAV shards whose decode is BIT-EXACT (r14 — the audio
     mirror of _stage_jpeg_shards): per-source waves CONSTANT within
     each 17-sample ADPCM block (block_align=12: 4-byte header + 8
@@ -2894,28 +2826,19 @@ def _stage_adpcm_shards(spark: SparkSession, sf_dir: str) -> str:
     oracle regenerates every sample arithmetically — full independent
     SQL verification of the block walk, nibble unpack, and predictor
     state machine."""
-    import os as _os
-
     import numpy as np
 
     from hdfs_stream_processing_spark.operators.multimodal import (
         encode_adpcm_wav,
     )
 
-    key = ("hsp_adpcmdec_staged_", sf_dir)
-    if key in _STAGE_CACHE:
-        return _STAGE_CACHE[key]
-    (documents,) = prep(spark, sf_dir, "documents")
-    wav_dir = _mkdtemp("hsp_adpcmdec_src_", sf_dir)
-    for row in documents.select("source").distinct().collect():
-        n = int(row["source"][3:])
+    def files(n: int) -> dict[str, bytes]:
         length = 50 + n % 17
         i = np.arange(length, dtype=np.int64)
         wave = (((37 * (i // 17) + 3 * n) % 401) - 200).astype(np.int16)
-        with open(_os.path.join(wav_dir, f"{row['source']}.wav"), "wb") as f:
-            f.write(encode_adpcm_wav(wave, 8000, block_align=12))
-    _STAGE_CACHE[key] = wav_dir
-    return wav_dir
+        return {".wav": encode_adpcm_wav(wave, 8000, block_align=12)}
+
+    _write_per_source(spark, sf_dir, out, files)
 
 
 @query(
@@ -3442,26 +3365,16 @@ def _synth_wave_stereo(n: int, length: int):
     return out.astype(np.int16)
 
 
-def _stage_stereo_wav_shards(spark: SparkSession, sf_dir: str) -> str:
+@_stage_once
+def _stage_stereo_wav_shards(out: str, spark: SparkSession, sf_dir: str) -> None:
     """One STEREO WAV per document source (lengths 50..66 frames, rate
     8000) — the 2-channel twin of _stage_wav_shards."""
-    import os as _os
-
     from hdfs_stream_processing_spark.operators.multimodal import encode_wav
 
-    key = ("hsp_wav2_staged_", sf_dir)
-    if key in _STAGE_CACHE:
-        return _STAGE_CACHE[key]
-    (documents,) = prep(spark, sf_dir, "documents")
-    wav_dir = _mkdtemp("hsp_wav2_src_", sf_dir)
-    for row in documents.select("source").distinct().collect():
-        n = int(row["source"][3:])
-        with open(_os.path.join(wav_dir, f"{row['source']}.wav"), "wb") as f:
-            f.write(
-                encode_wav(_synth_wave_stereo(n, 50 + n % 17), 8000, n_channels=2)
-            )
-    _STAGE_CACHE[key] = wav_dir
-    return wav_dir
+    def files(n: int) -> dict[str, bytes]:
+        return {".wav": encode_wav(_synth_wave_stereo(n, 50 + n % 17), 8000, n_channels=2)}
+
+    _write_per_source(spark, sf_dir, out, files)
 
 
 def _decoded_stereo(spark: SparkSession, sf_dir: str) -> DataFrame:

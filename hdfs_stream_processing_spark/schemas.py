@@ -118,21 +118,6 @@ DRIVER_TABLES: dict[str, T.StructType] = {
 
 SENSOR_METRICS = ["co2", "humidity", "light", "pir", "temperature"]
 
-
-def sensor_narrow_schema(metric: str) -> T.StructType:
-    """Per-sensor 2-column CSV: (ts_min_bignt, <metric>).
-
-    Reference: utils/spark_transforming.py:66,82-83 — there the column name
-    is assigned positionally via toDF(); here it is declared.
-    """
-    return T.StructType(
-        [
-            T.StructField("ts_min_bignt", T.LongType()),
-            T.StructField(metric, T.DoubleType()),
-        ]
-    )
-
-
 #: Unified wide sensors table — output of the alignment join + union
 #: (utils/spark_transforming.py:97-114,128,143-149).  The streaming consumers
 #: parse the same columns but with narrower types (FloatType metrics,

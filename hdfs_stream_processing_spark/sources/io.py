@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import json
 import re
-import weakref
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,20 +23,21 @@ from hdfs_stream_processing_spark.schemas import DRIVER_TABLES, schema_for
 
 TABLE_NAMES = list(DRIVER_TABLES)
 
-#: Per-session memo of ANALYZED base-table DataFrames (r15, guide §7.3
-#: "driver-side single-process work"): ``spark.read.parquet`` costs
-#: ~85 ms per call (footer/schema resolution + py4j) and every query
-#: invocation re-paid it per table — ~100-200 ms of pure driver latency
-#: per query, the single largest component of the sub-second tail.  A
-#: DataFrame is an immutable LOGICAL PLAN, so reusing the object is
-#: plan-level only: nothing is persisted or .cache()d, every action
-#: still scans the parquet from disk.  Keyed weakly by session (a
-#: closed session's entries vanish with it); the driver tables are
-#: immutable test fixtures, so the pinned file listing cannot go stale
-#: — the same assumption the session's FileStatusCache already makes.
-_TABLE_PLANS: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
+#: Attribute holding each session's memo of ANALYZED base-table
+#: DataFrames (r15, guide §7.3 "driver-side single-process work"):
+#: ``spark.read.parquet`` costs ~85 ms per call (footer/schema resolution
+#: + py4j) and every query invocation re-paid it per table — ~100-200 ms
+#: of pure driver latency per query, the single largest component of the
+#: sub-second tail.  A DataFrame is an immutable LOGICAL PLAN, so reusing
+#: the object is plan-level only: nothing is persisted or .cache()d,
+#: every action still scans the parquet from disk.  The memo lives on the
+#: session object itself: each DataFrame references its session, so a
+#: memo keyed by session elsewhere would keep every session alive, while
+#: this session ↔ memo cycle is collected with the session.  The driver
+#: tables are immutable test fixtures, so the pinned file listing cannot
+#: go stale — the same assumption the session's FileStatusCache already
+#: makes.
+_TABLE_PLANS = "_hsp_table_plans"
 
 
 def load_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -62,7 +62,7 @@ def load_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
       funnel lags) sees the exact integer microsecond it would read
       straight from the file.
     """
-    per = _TABLE_PLANS.setdefault(spark, {})
+    per = spark.__dict__.setdefault(_TABLE_PLANS, {})
     cached = per.get((sf_dir, table))
     if cached is not None:
         return cached
@@ -183,15 +183,6 @@ def swap_dirs(spark: SparkSession, new_dir: str, live_dir: str) -> None:
         fs.rename(retired, live)  # roll back
         raise IOError(f"swap_dirs: could not publish {new_dir}")
     fs.delete(retired, True)
-
-
-def path_exists(spark: SparkSession, path: str) -> bool:
-    """Whether ``path`` exists, via the Hadoop FileSystem API (HDFS,
-    S3A, and local alike).  One metadata call — lets callers distinguish
-    "table not created yet" from transient read failures instead of
-    swallowing every exception."""
-    Path, fs = _fs_for(spark, path)
-    return bool(fs.exists(Path(path)))
 
 
 def parquet_table_exists(spark: SparkSession, path: str) -> bool:

@@ -142,18 +142,6 @@ def test_summary_line_bounded_under_driver_tail_buffer():
     assert json.loads(json.dumps(build_summary(out, {})))["moved_vs_prev"] == {}
 
 
-def test_headline_covers_entire_registry():
-    """VERDICT r7 #8: the bench's headline set must equal the query
-    registry — a query that exists but is never benched has no perf
-    attestation, and a benched name that left the registry would crash
-    the round's bench run."""
-    from bench import HEADLINE
-    from hdfs_stream_processing_spark import queries as Q
-
-    assert sorted(HEADLINE) == sorted(Q.QUERIES)
-    assert len(HEADLINE) == len(set(HEADLINE))
-
-
 def test_sentinel_mid_sweep_burst_fails_gate():
     """r9: the first end-of-round sweep passed BOTH endpoint sentinels
     yet carried a 40-minute-window contention burst (scd2_build 1.52 s

@@ -45,6 +45,24 @@ def test_load_table_events_ts_is_timestamp(spark):
     assert row["ts"].year >= 2020
 
 
+def test_load_table_memo_does_not_keep_its_session_alive(spark):
+    """The per-session plan memo must not outlive its session: each
+    memoized DataFrame references the session, so the memo may not be
+    held anywhere the session is not."""
+    import gc
+    import weakref
+
+    other = spark.newSession()
+    load_table(other, SF_DIR, "events")
+    ref = weakref.ref(other)
+    # PySpark pins the most recently built session (its RDD.toDF patch
+    # closes over it); building one more moves that pin off ``other``
+    spark.newSession()
+    del other
+    gc.collect()
+    assert ref() is None
+
+
 def test_schema_checked_raises_on_drift(spark):
     df = load_table(spark, SF_DIR, "region").withColumnRenamed("r_name", "oops")
     with pytest.raises(ValueError, match="schema drift"):
@@ -328,7 +346,7 @@ def test_corrupt_json_lines_are_quarantined_not_dropped(spark):
     from pyspark.sql import types as T
 
     import hdfs_stream_processing_spark.queries as Q
-    from hdfs_stream_processing_spark.queries import _mkdtemp  # staged dir memo
+    from hdfs_stream_processing_spark.queries_incremental import _stage_corrupt_json
     from hdfs_stream_processing_spark.sources.io import load_table
 
     sf = "/root/testdata/sf0.001"
@@ -340,7 +358,7 @@ def test_corrupt_json_lines_are_quarantined_not_dropped(spark):
     n_bad_expected = events.where(F.col("event_id") % 7 == 0).count()
     assert len(good) == events.count() - n_bad_expected
 
-    stage = _mkdtemp("hsp_corrupt_", memo_key=sf)
+    stage = _stage_corrupt_json(spark, sf)
     schema = T.StructType(
         [
             T.StructField("event_id", T.LongType()),

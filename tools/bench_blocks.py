@@ -81,12 +81,13 @@ def main() -> int:
     )
     args = ap.parse_args()
 
-    from bench import HEADLINE
+    from hdfs_stream_processing_spark import queries as Q
 
+    names = list(Q.QUERIES)
     os.makedirs(args.out_dir, exist_ok=True)
     n = max(1, args.blocks)
-    size = (len(HEADLINE) + n - 1) // n
-    blocks = [HEADLINE[i : i + size] for i in range(0, len(HEADLINE), size)]
+    size = (len(names) + n - 1) // n
+    blocks = [names[i : i + size] for i in range(0, len(names), size)]
 
     passing: list[str] = []
     failed: list[int] = []
