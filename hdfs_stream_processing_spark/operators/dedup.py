@@ -150,7 +150,7 @@ def dedup_near_incremental(
     # touching a corpus-dup id are dropped AFTER the verify — same final
     # edge set, since dropping an endpoint drops its edges either way.
     cand = cross.withColumn("is_cross", F.lit(True)).unionByName(
-        lsh_candidate_pairs(sig, id_col, num_hashes, band_size, wide=True)
+        lsh_candidate_pairs(sig, id_col, num_hashes, band_size)
         .select("id_a", "id_b")
         .withColumn("is_cross", F.lit(False))
     )
@@ -419,33 +419,17 @@ def lsh_candidate_pairs(
     id_col: str,
     num_hashes: int = 8,
     band_size: int = 2,
-    wide: bool = False,
 ) -> DataFrame:
-    """LSH banding: docs sharing any band of the signature become a
-    candidate pair (id_a < id_b).
+    """LSH banding over a :func:`minhash_signature_wide` signature:
+    docs sharing any band become a candidate pair (id_a < id_b).
 
     Band hash = md5 of the (numerically sorted) minhashes in the band;
     the candidate join is an equi-join on (band, band_hash) — the scale
-    path that avoids all-pairs.  With ``wide=True`` (signature from
-    minhash_signature_wide) banding is shuffle-free — the whole
-    candidate generation costs one groupBy + one equi-join.
+    path that avoids all-pairs.  Banding the wide signature is
+    shuffle-free, so the whole candidate generation costs one groupBy
+    + one equi-join.
     """
-    if wide:
-        band_sig = band_hashes(sig, id_col, num_hashes, band_size)
-    else:
-        banded = sig.withColumn(
-            "band", F.floor(F.col("seed") / F.lit(float(band_size))).cast("int")
-        )
-        band_sig = banded.groupBy(id_col, "band").agg(
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    F.transform(
-                        F.sort_array(F.collect_list(F.col("minhash"))), lambda x: x.cast("string")
-                    ),
-                )
-            ).alias("band_hash")
-        )
+    band_sig = band_hashes(sig, id_col, num_hashes, band_size)
     a = band_sig.select(
         F.col(id_col).alias("id_a"), F.col("band"), F.col("band_hash")
     )

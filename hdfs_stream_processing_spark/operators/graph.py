@@ -34,8 +34,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iterations: int = 50,
-    loop_shuffle_partitions: int | None = None,
-    loop_codegen: bool = False,
     driver_max_edges: int = 500_000,
 ) -> DataFrame:
     """(id, component) for every vertex appearing in ``edges``;
@@ -56,9 +54,6 @@ def connected_components(
     compiles a FRESH plan — at label-frame sizes Janino compilation
     costs more wall-clock than interpreted execution saves (measured:
     first-run 23 s → 6.7 s, run-to-run spread 3.3× → 1.7× at sf0.1).
-    Set ``loop_codegen=True`` for billion-edge graphs where per-round
-    data dwarfs compile time, and ``loop_shuffle_partitions`` to
-    override the ~2M-edges-per-reducer sizing.
     """
     # materialize the upstream edge-producing plan exactly ONCE, already
     # deduplicated (self-loop rows survive the distinct, so both the
@@ -92,11 +87,9 @@ def connected_components(
     if cur_count <= driver_max_edges:
         return _components_driver(spark, dist, dist.toPandas())
     cur = dist.where(F.col("u") != F.col("v"))
-    if loop_shuffle_partitions is None:
-        loop_shuffle_partitions = max(8, cur_count // 2_000_000)
     scoped = {
-        "spark.sql.shuffle.partitions": str(loop_shuffle_partitions),
-        "spark.sql.codegen.wholeStage": str(loop_codegen).lower(),
+        "spark.sql.shuffle.partitions": str(max(8, cur_count // 2_000_000)),
+        "spark.sql.codegen.wholeStage": "false",
     }
     prior = {k: spark.conf.get(k, None) for k in scoped}
     for k, v in scoped.items():

@@ -59,21 +59,15 @@ def fk_violations(
     parent: DataFrame,
     parent_key: str,
     rule: str,
-    dedup_parent: bool = False,
 ) -> DataFrame:
     """Referential-integrity rule: count child rows whose key has no
     parent.  One anti-join on the parent's key column — dim-sized
     parents broadcast and the child never shuffles.  Anti-join ignores
-    duplicate right-side keys, so no distinct is needed for a
-    primary-key parent (set ``dedup_parent`` only when the parent has
-    MANY rows per key and the dedup shuffle is cheaper than hashing
-    the duplicates into the broadcast relation).  Returns the same
-    (rule, n_violations) shape as :func:`dq_check` for unioning into
-    one report.
+    duplicate right-side keys, so the parent needs no distinct.
+    Returns the same (rule, n_violations) shape as :func:`dq_check`
+    for unioning into one report.
     """
     keys = parent.select(F.col(parent_key).alias(child_key))
-    if dedup_parent:
-        keys = keys.distinct()
     orphans = child.join(keys, child_key, "left_anti")
     return orphans.agg(
         F.lit(rule).alias("rule"),

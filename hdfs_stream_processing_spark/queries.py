@@ -27,7 +27,6 @@ from hdfs_stream_processing_spark.functions.wire import to_wire
 from hdfs_stream_processing_spark.operators import (
     add_lit,
     case_when,
-    count_distinct,
     count_rows,
     drop_nulls,
     group_agg,
@@ -38,7 +37,6 @@ from hdfs_stream_processing_spark.operators import (
     top_k,
     union_by_name,
     window_rank,
-    window_running,
 )
 from hdfs_stream_processing_spark.operators.aggregates import approx_distinct
 from hdfs_stream_processing_spark.operators.text import FOLD_DST, FOLD_SRC
@@ -73,12 +71,14 @@ def query(name: str, oracle: str | None = None):
 
 
 from contextlib import contextmanager
+import atexit
 import functools
 import os
 import shutil
 import tempfile
 
 _REUSED_DIRS: dict = {}
+_PROC_ROOT: str | None = None
 
 
 def _mkdtemp(prefix: str, memo_key: object = None) -> str:
@@ -86,14 +86,29 @@ def _mkdtemp(prefix: str, memo_key: object = None) -> str:
     ours).  With ``memo_key`` the dir is reused per (prefix, key) — for
     the few queries that keep writing into one dir across calls
     (time_travel's versioned table, bucketed_join's external tables).
-    Staged inputs go through :func:`_stage_once` instead."""
+    Staged inputs go through :func:`_stage_once` instead.
+
+    Every dir lives under one per-process root, made on the first call
+    and removed when that process exits.  The exit hook is registered
+    then, not at import, and checks the pid it was registered in, so
+    neither a Python worker that imports this module nor a forked child
+    removes the dirs of the process that made them."""
+    global _PROC_ROOT
     if memo_key is not None:
         if (prefix, memo_key) not in _REUSED_DIRS:
             _REUSED_DIRS[(prefix, memo_key)] = _mkdtemp(prefix)
         return _REUSED_DIRS[(prefix, memo_key)]
-    base = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp")
-    os.makedirs(base, exist_ok=True)
-    return tempfile.mkdtemp(prefix=prefix, dir=base)
+    if _PROC_ROOT is None:
+        base = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp")
+        os.makedirs(base, exist_ok=True)
+        _PROC_ROOT = tempfile.mkdtemp(prefix=f"hsp_pid{os.getpid()}_", dir=base)
+        atexit.register(_remove_proc_root, _PROC_ROOT, os.getpid())
+    return tempfile.mkdtemp(prefix=prefix, dir=_PROC_ROOT)
+
+
+def _remove_proc_root(root: str, pid: int) -> None:
+    if os.getpid() == pid:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 _STAGE_CACHE: dict = {}
@@ -912,7 +927,7 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (documents,) = prep(spark, sf_dir, "documents")
     sig = minhash_signature_wide(documents, "doc_id", "text", num_hashes=8, shingle_n=2)
-    return lsh_candidate_pairs(sig, "doc_id", num_hashes=8, band_size=2, wide=True)
+    return lsh_candidate_pairs(sig, "doc_id", num_hashes=8, band_size=2)
 
 
 @query(
@@ -1449,9 +1464,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     restricted to an equi-join key (label — in production an LSH bucket),
     exact quantized cosine, threshold filter.  Never all-pairs: the join
     is keyed, the cosine exact, the result oracle-checkable."""
-    from hdfs_stream_processing_spark.operators.similarity import cosine_q, quantized
-
-    from hdfs_stream_processing_spark.operators.similarity import dot_q
+    from hdfs_stream_processing_spark.operators.similarity import dot_q, quantized
 
     (embeddings,) = prep(spark, sf_dir, "embeddings")
     q = embeddings.select("vec_id", "label", quantized("embedding").alias("qv"))
@@ -2575,7 +2588,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (documents,) = prep(spark, sf_dir, "documents")
     sig = minhash_signature_wide(documents, "doc_id", "text", num_hashes=8, shingle_n=2)
-    pairs = lsh_candidate_pairs(sig, "doc_id", num_hashes=8, band_size=2, wide=True)
+    pairs = lsh_candidate_pairs(sig, "doc_id", num_hashes=8, band_size=2)
     return connected_components(pairs)
 
 
@@ -2607,7 +2620,7 @@ def q_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (documents,) = prep(spark, sf_dir, "documents")
     sig = minhash_signature_wide(documents, "doc_id", "text", num_hashes=8, shingle_n=2)
-    pairs = lsh_candidate_pairs(sig, "doc_id", num_hashes=8, band_size=2, wide=True)
+    pairs = lsh_candidate_pairs(sig, "doc_id", num_hashes=8, band_size=2)
     comp = connected_components(pairs)
     return cluster_representatives(
         documents.select("doc_id", "lang", "source"), comp, "doc_id"

@@ -282,7 +282,7 @@ def q_stream_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     tdir = _mkdtemp("hsp_svocab_")
     ckpt = _mkdtemp("hsp_svocab_ckpt_")
     run_stream_rollup(stream, tdir, ckpt, ["token"], ["freq"], partial)
-    counts = read_table_version(spark, tdir).drop("_batch")
+    counts = read_table_version(spark, tdir)
     w = Window.orderBy(F.col("freq").desc(), F.col("token").asc())
     return counts.select(
         (F.row_number().over(w) - F.lit(1)).cast("long").alias("token_id"),
@@ -1417,7 +1417,7 @@ def q_dedup_keep_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (documents,) = prep(spark, sf_dir, "documents")
     sig = minhash_signature_wide(documents, "doc_id", "text", num_hashes=8, shingle_n=2)
-    pairs = lsh_candidate_pairs(sig, "doc_id", num_hashes=8, band_size=2, wide=True)
+    pairs = lsh_candidate_pairs(sig, "doc_id", num_hashes=8, band_size=2)
     comp = connected_components(pairs)
     return cluster_representatives_by(
         documents.select("doc_id", "lang", "source", "n_chars"),
@@ -1890,7 +1890,7 @@ def q_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = prep(spark, sf_dir, "documents")
     docs = documents.select("doc_id", "lang", "source", "n_chars")
     sig = minhash_signature_wide(documents, "doc_id", "text", num_hashes=8, shingle_n=2)
-    pairs = lsh_candidate_pairs(sig, "doc_id", num_hashes=8, band_size=2, wide=True)
+    pairs = lsh_candidate_pairs(sig, "doc_id", num_hashes=8, band_size=2)
     comp = connected_components(pairs)
     m = docs.join(comp, docs.doc_id == comp.id).select(
         "component", "doc_id", "lang", "source", "n_chars"
@@ -1987,8 +1987,6 @@ def q_incr_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per load the contracted graph, the affected member set,
     and every vote table are batch-bounded; corpus bytes are touched
     by the band equi-join and the affected-member semi-join only."""
-    from pyspark.sql import Window
-
     from hdfs_stream_processing_spark.operators.dedup import (
         band_hashes,
         lsh_candidate_pairs,
@@ -2006,7 +2004,7 @@ def q_incr_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus_sig = minhash_signature_wide(corpus, "doc_id", "text", 8, 2)
     corpus_bands = band_hashes(corpus_sig, "doc_id", 8, 2).localCheckpoint(eager=False)
     corpus_comp = connected_components(
-        lsh_candidate_pairs(corpus_sig, "doc_id", 8, 2, wide=True)
+        lsh_candidate_pairs(corpus_sig, "doc_id", 8, 2)
     ).localCheckpoint(eager=False)
     g_old = _golden_from_members(
         corpus.join(corpus_comp, corpus.doc_id == corpus_comp.id)
@@ -2060,7 +2058,7 @@ def _golden_step(
         eager=False
     )
     bands_b = band_hashes(sig_b, "doc_id", 8, 2).localCheckpoint(eager=False)
-    batch_pairs = lsh_candidate_pairs(sig_b, "doc_id", 8, 2, wide=True).select(
+    batch_pairs = lsh_candidate_pairs(sig_b, "doc_id", 8, 2).select(
         "id_a", "id_b"
     )
     cross = (
@@ -2175,22 +2173,16 @@ def q_stream_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAME component-contraction step as `incr_golden`
     (:func:`_golden_step` — the batch/incremental/streaming triad that
     scd2_build/scd2_merge/stream_scd2 established, now for MDM
-    survivorship).  Four versioned state tables (bands, component
-    labels, attributes, golden) commit per batch behind a batch-id
-    replay guard; because the step is exact under ANY batch split, the
+    survivorship).  One versioned state snapshot (bands, component
+    labels, attributes and golden rows behind a ``_t`` discriminator)
+    commits per batch behind a batch-id replay guard; because the step is exact under ANY batch split, the
     final table must equal the one-shot full-corpus golden build — the
     oracle is golden_record's SQL verbatim.
 
     Scale: per batch, the delta graph and vote tables are
     batch-bounded; state grows with the corpus (bands/labels/attrs),
     and history is never re-clustered."""
-    from pyspark.sql import types as T
-
-    from hdfs_stream_processing_spark.sources.io import (
-        read_table_version,
-        table_latest_version,
-        write_table_version,
-    )
+    from hdfs_stream_processing_spark.sources.io import read_table_version
     from hdfs_stream_processing_spark.streaming import stream_parquet_source
     from hdfs_stream_processing_spark.streaming.pipeline import run_foreach_batch
 
@@ -2209,9 +2201,7 @@ def q_stream_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     # restored after; the CC calls inside scope their own loop conf).
     with _conf_override(spark, "spark.sql.shuffle.partitions", "8"):
         run_foreach_batch(stream, step, ckpt)
-    return _golden_slice(
-        read_table_version(spark, state).drop("_batch"), "golden"
-    )
+    return _golden_slice(read_table_version(spark, state), "golden")
 
 
 _GOLDEN_STATE_DDL = {
@@ -2374,7 +2364,7 @@ def q_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         sub, "doc_id", "text", t_num=8, t_den=9, shingle_n=1
     ).select("id_a", "id_b")
     sig = minhash_signature_wide(sub, "doc_id", "text", num_hashes=16, shingle_n=1)
-    cand = lsh_candidate_pairs(sig, "doc_id", num_hashes=16, band_size=2, wide=True)
+    cand = lsh_candidate_pairs(sig, "doc_id", num_hashes=16, band_size=2)
     n_true = truth.agg(F.count(F.lit(1)).cast("long").alias("n_true_pairs"))
     n_hit = truth.join(cand, ["id_a", "id_b"], "left_semi").agg(
         F.count(F.lit(1)).cast("long").alias("n_hit_pairs")

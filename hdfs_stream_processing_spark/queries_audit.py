@@ -324,7 +324,6 @@ def q_stream_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     run_stream_rollup(stream, tdir, ckpt, ["_sh"], ["nd"], partial)
     docfreq = (
         read_table_version(spark, tdir)
-        .drop("_batch")
         .where(F.col("nd") >= F.lit(2))
         .select("_sh")
     )
@@ -479,7 +478,7 @@ def q_stream_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     tdir = _mkdtemp("hsp_skanon_")
     ckpt = _mkdtemp("hsp_skanon_ckpt_")
     run_stream_rollup(stream, tdir, ckpt, [*qid, "o_custkey"], ["n"], partial)
-    pairs = read_table_version(spark, tdir).drop("_batch")
+    pairs = read_table_version(spark, tdir)
     return pairs.groupBy(*qid).agg(
         F.sum("n").cast("bigint").alias("class_size"),
         F.count(F.lit(1)).cast("bigint").alias("n_sensitive"),

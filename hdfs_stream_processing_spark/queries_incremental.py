@@ -1173,11 +1173,9 @@ def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension; replays skip on the committed batch id).  The live
     dimension must equal the one-shot scd2_build over the whole log —
     the same oracle proves batch and stream paths identical."""
+    from hdfs_stream_processing_spark.sources.io import read_table_version
     from hdfs_stream_processing_spark.streaming import stream_parquet_source
-    from hdfs_stream_processing_spark.streaming.pipeline import (
-        read_scd2_snapshot,
-        run_stream_scd2,
-    )
+    from hdfs_stream_processing_spark.streaming.pipeline import run_stream_scd2
 
     (events,) = prep(spark, sf_dir, "events")
     src_dir = _stage_events_time_ordered(spark, sf_dir)
@@ -1188,7 +1186,7 @@ def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     run_stream_scd2(
         log, tdir, ckpt, ["user_id"], "ts", "event_type", tiebreak_cols=["event_id"]
     )
-    return read_scd2_snapshot(spark, tdir)
+    return read_table_version(spark, tdir)
 
 
 @query(
@@ -1335,7 +1333,7 @@ def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tdir = _mkdtemp("hsp_stopk_")
     ckpt = _mkdtemp("hsp_stopk_ckpt_")
     run_stream_rollup(stream, tdir, ckpt, ["source", "token"], ["n"], partial)
-    counts = read_table_version(spark, tdir).drop("_batch")
+    counts = read_table_version(spark, tdir)
     w = Window.partitionBy("source").orderBy(F.col("n").desc(), F.col("token").asc())
     return counts.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= 3)
 
@@ -1608,7 +1606,7 @@ def q_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     tdir = _mkdtemp("hsp_scms_")
     ckpt = _mkdtemp("hsp_scms_ckpt_")
     run_stream_rollup(stream, tdir, ckpt, ["row", "bucket"], ["n"], partial)
-    return read_table_version(spark, tdir).drop("_batch").select(
+    return read_table_version(spark, tdir).select(
         "row", "bucket", F.col("n").alias("total")
     )
 

@@ -940,7 +940,7 @@ def q_stream_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tdir = _mkdtemp("hsp_schunk_")
     ckpt = _mkdtemp("hsp_schunk_ckpt_")
     run_stream_rollup(stream, tdir, ckpt, ["chunk_text"], ["nd"], partial)
-    docfreq = read_table_version(spark, tdir).drop("_batch")
+    docfreq = read_table_version(spark, tdir)
     (documents,) = prep(spark, sf_dir, "documents")
     chunks = chunk_documents(
         documents, "doc_id", "text", chunk_size=4, stride=4

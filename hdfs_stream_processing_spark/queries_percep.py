@@ -513,8 +513,8 @@ def q_stream_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-batch work is batch-sized (no per-batch LPA — label
     propagation over the full graph is a READ, recomputed on demand,
     the standard lambda-style split); state is edge-cardinality, the
-    graph itself.  A replayed micro-batch is skipped by the _batch
-    guard, so the edge counts stay exact."""
+    graph itself.  A replayed micro-batch is skipped by the batch-id
+    replay guard, so the edge counts stay exact."""
     from hdfs_stream_processing_spark.operators.graph import label_propagation
     from hdfs_stream_processing_spark.sources.io import read_table_version
     from hdfs_stream_processing_spark.streaming import stream_parquet_source
@@ -596,7 +596,6 @@ def q_stream_substring_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dup_keepers = (
         read_table_version(spark, tdir)
-        .drop("_batch")
         .where(F.col("nd") >= F.lit(2))
         .select("_sh", "_keep")
     )

@@ -372,23 +372,16 @@ def _listed_versions(fs, Path, base: str) -> list[int]:
     return sorted(int(m[1]) for m in map(_VERSION_DIR.fullmatch, names) if m)
 
 
-#: Marks the current ``v=<n>/_meta.json`` layout: ``{"sidecar": 2,
-#: "meta": <caller meta or null>, "schema": <snapshot schema JSON>}``.
-#: r14 sidecars hold the bare caller ``meta`` dict instead, and older
-#: snapshots have no sidecar at all.
-_SIDECAR = 2
-
-
 def _read_sidecar(spark: SparkSession, table_dir: str, v: int):
-    """``(caller meta, schema JSON)`` recorded for snapshot ``v``;
-    either is None when the snapshot's layout predates it."""
+    """``(caller meta, schema JSON)`` recorded in snapshot ``v``'s
+    ``_meta.json``; every committed snapshot has one, so a missing
+    sidecar raises."""
     Path, fs = _fs_for(spark, table_dir)
-    raw = _read_text(fs, Path(f"{table_dir.rstrip('/')}/v={v}/_meta.json"))
+    path = f"{table_dir.rstrip('/')}/v={v}/_meta.json"
+    raw = _read_text(fs, Path(path))
     if raw is None:
-        return None, None
+        raise FileNotFoundError(f"snapshot sidecar missing: {path}")
     doc = json.loads(raw)
-    if doc.get("sidecar") != _SIDECAR:
-        return doc, None
     return doc["meta"], doc["schema"]
 
 
@@ -457,7 +450,7 @@ def write_table_version(
         [table_latest_version(spark, table_dir) or 0, *_listed_versions(fs, Path, base)]
     )
     df.write.mode("error").parquet(f"{base}/v={n}/data")
-    sidecar = {"sidecar": _SIDECAR, "meta": meta, "schema": df.schema.jsonValue()}
+    sidecar = {"meta": meta, "schema": df.schema.jsonValue()}
     _write_text(fs, Path(f"{base}/v={n}/_meta.json"), json.dumps(sidecar))
     tmp = Path(f"{base}/_latest.tmp")
     ptr = Path(f"{base}/_latest")
@@ -476,16 +469,14 @@ def read_table_version(
     ``version`` for time travel.
 
     The read uses the schema the sidecar recorded at commit, so it
-    starts no Spark job; a snapshot whose sidecar predates the schema
-    record has it inferred from the Parquet footers."""
+    starts no Spark job."""
     v = version if version is not None else table_latest_version(spark, table_dir)
     if v is None:
         raise FileNotFoundError(f"no committed version in {table_dir}")
     _, schema = _read_sidecar(spark, table_dir, v)
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(T.StructType.fromJson(schema))
-    return reader.parquet(f"{table_dir.rstrip('/')}/v={v}/data")
+    return spark.read.schema(T.StructType.fromJson(schema)).parquet(
+        f"{table_dir.rstrip('/')}/v={v}/data"
+    )
 
 
 def table_version_meta(
@@ -493,8 +484,7 @@ def table_version_meta(
 ) -> dict | None:
     """The ``meta`` a snapshot was committed with (kept in
     ``v=<n>/_meta.json``), or None when it was written without one or
-    carries no sidecar — callers that need a fact recorded there must
-    fall back to deriving it from the data."""
+    the table has never committed."""
     v = version if version is not None else table_latest_version(spark, table_dir)
     if v is None:
         return None
@@ -533,35 +523,31 @@ def apply_versioned_batch(
     guard, commit and vacuum every streaming maintainer (rollup, mixed
     rollup, SCD2, golden) shares.
 
-    ``merge(existing)`` gets the latest snapshot without its ``_batch``
-    column, or None before the first commit, and returns the new state.
-    That is committed (:func:`write_table_version`) with ``batch_id`` as
-    the long ``_batch`` column and as the sidecar meta's ``batch``, then
-    all but the last two snapshots are vacuumed.
+    ``merge(existing)`` gets the latest snapshot, or None before the
+    first commit, and returns the new state.  That is committed
+    (:func:`write_table_version`) unchanged, with ``batch_id`` as the
+    sidecar meta's ``batch`` — the one record of which batch a snapshot
+    holds — then all but the last two snapshots are vacuumed.
 
     Merges are not replay-idempotent (a re-added batch double-counts),
-    so a ``batch_id`` at or below the committed stamp is skipped.  The
-    stamp comes from the sidecar (a driver-side read, no Spark job), or
-    for a snapshot without one from a ``max(_batch)`` scan.  Returns
-    True when a snapshot was committed, False for a replay skip.
+    so a ``batch_id`` at or below the committed one is skipped.  The
+    guard reads only the latest sidecar (a driver-side file read, no
+    Spark job) and returns before the snapshot is read.  A latest
+    snapshot whose sidecar records no ``batch`` was not committed by
+    this function, so the guard has nothing to compare: ValueError.  Returns True when a snapshot was committed,
+    False for a replay skip.
     """
     latest = table_latest_version(spark, table_dir)
     existing = None
     if latest is not None:
-        snap = read_table_version(spark, table_dir, latest)
-        meta = table_version_meta(spark, table_dir, latest)
-        if meta is not None and "batch" in meta:
-            done = meta["batch"]
-        else:
-            done = snap.agg(F.max("_batch")).first()[0]
-        if done is not None and batch_id <= done:
+        meta = table_version_meta(spark, table_dir, latest) or {}
+        if "batch" not in meta:
+            raise ValueError(
+                f"{table_dir}: snapshot v={latest} records no committed batch"
+            )
+        if batch_id <= meta["batch"]:
             return False
-        existing = snap.drop("_batch")
-    write_table_version(
-        spark,
-        merge(existing).withColumn("_batch", F.lit(batch_id).cast("long")),
-        table_dir,
-        meta={"batch": batch_id},
-    )
+        existing = read_table_version(spark, table_dir, latest)
+    write_table_version(spark, merge(existing), table_dir, meta={"batch": batch_id})
     vacuum_table_versions(spark, table_dir, keep_last=2)
     return True

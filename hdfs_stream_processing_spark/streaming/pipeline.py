@@ -733,14 +733,6 @@ def run_stream_scd2(
     run_foreach_batch(df, step, checkpoint_dir)
 
 
-def read_scd2_snapshot(spark: SparkSession, table_dir: str) -> DataFrame:
-    """Read the live dimension a :func:`run_stream_scd2` target
-    publishes (latest committed snapshot, bookkeeping column dropped)."""
-    from hdfs_stream_processing_spark.sources.io import read_table_version
-
-    return read_table_version(spark, table_dir).drop("_batch")
-
-
 def rollup_apply_batch(
     batch_partial: DataFrame,
     table_dir: str,

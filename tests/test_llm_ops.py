@@ -10,6 +10,7 @@ from hdfs_stream_processing_spark.operators.dedup import (
     jaccard_pairs,
     lsh_candidate_pairs,
     minhash_signature,
+    minhash_signature_wide,
     simhash,
 )
 from hdfs_stream_processing_spark.operators.multimodal import (
@@ -59,7 +60,7 @@ def test_lsh_finds_near_duplicates(spark):
             (3, "completely different words entirely unrelated content here now"),
         ],
     )
-    sig = minhash_signature(df, "doc_id", "text", num_hashes=8, shingle_n=2)
+    sig = minhash_signature_wide(df, "doc_id", "text", num_hashes=8, shingle_n=2)
     pairs = {(r["id_a"], r["id_b"]) for r in lsh_candidate_pairs(sig, "doc_id").collect()}
     assert (1, 2) in pairs
     assert (1, 3) not in pairs and (2, 3) not in pairs

@@ -329,7 +329,7 @@ def test_rollup_apply_batch_mixed_replay_guard(spark, tmp_path):
     assert not rollup_apply_batch_mixed(b1, tdir, ["k"], spec, batch_id=1)
     got = {
         r["k"]: (r["nd"], r["keepkey"])
-        for r in read_table_version(spark, tdir).drop("_batch").collect()
+        for r in read_table_version(spark, tdir).collect()
     }
     assert got == {"w1": (3, 50), "w2": (2, 205)}
 
@@ -422,7 +422,7 @@ def test_rollup_mixed_struct_min_keeper_survives_wide_offsets(spark, tmp_path):
     b1 = spark.createDataFrame([("w1", 1, (1, 1_500_000))], schema)
     assert rollup_apply_batch_mixed(b0, tdir, ["k"], spec, batch_id=0)
     assert rollup_apply_batch_mixed(b1, tdir, ["k"], spec, batch_id=1)
-    rows = read_table_version(spark, tdir).drop("_batch").collect()
+    rows = read_table_version(spark, tdir).collect()
     assert len(rows) == 1
     assert rows[0]["nd"] == 2
     assert (rows[0]["_keep"]["d"], rows[0]["_keep"]["o"]) == (1, 1_500_000)

@@ -272,10 +272,7 @@ def test_commit_skips_snapshot_orphaned_before_pointer_flip(spark, tmp_path):
 
     assert rollup_apply_batch(batch, tdir, ["k"], ["n"], batch_id=1)
     assert table_latest_version(spark, tdir) == 3
-    got = {
-        r["k"]: r["n"]
-        for r in read_table_version(spark, tdir).drop("_batch").collect()
-    }
+    got = {r["k"]: r["n"] for r in read_table_version(spark, tdir).collect()}
     assert got == {"a": 4, "b": 2}
 
     assert rollup_apply_batch(batch, tdir, ["k"], ["n"], batch_id=2)
@@ -291,8 +288,6 @@ def test_commit_recovers_pointer_lost_between_delete_and_rename(spark, tmp_path)
     state; an empty ``_latest.tmp`` alone counts as no pointer."""
     import os
 
-    from pyspark.sql import functions as F
-
     from hdfs_stream_processing_spark.sources.io import (
         read_table_version,
         table_latest_version,
@@ -301,10 +296,7 @@ def test_commit_recovers_pointer_lost_between_delete_and_rename(spark, tmp_path)
     from hdfs_stream_processing_spark.streaming.pipeline import rollup_apply_batch
 
     def state(tdir):
-        return {
-            r["k"]: r["n"]
-            for r in read_table_version(spark, tdir).drop("_batch").collect()
-        }
+        return {r["k"]: r["n"] for r in read_table_version(spark, tdir).collect()}
 
     tdir = str(tmp_path / "roll")
     batch = spark.createDataFrame([("a", 2), ("b", 1)], "k string, n long")
@@ -313,10 +305,7 @@ def test_commit_recovers_pointer_lost_between_delete_and_rename(spark, tmp_path)
     # batch 2 crashed after v=3's data, sidecar and _latest.tmp were
     # written and the old _latest was deleted, before the rename
     v3 = spark.createDataFrame([("a", 6), ("b", 3)], "k string, n long")
-    assert write_table_version(
-        spark, v3.withColumn("_batch", F.lit(2).cast("long")), tdir,
-        meta={"batch": 2},
-    ) == 3
+    assert write_table_version(spark, v3, tdir, meta={"batch": 2}) == 3
     os.rename(f"{tdir}/_latest", f"{tdir}/_latest.tmp")
     if os.path.exists(f"{tdir}/._latest.crc"):  # local-fs checksum file
         os.rename(f"{tdir}/._latest.crc", f"{tdir}/._latest.tmp.crc")

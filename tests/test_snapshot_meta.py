@@ -1,24 +1,21 @@
 """Snapshot commit sidecar ``v=<n>/_meta.json``.
 
-``write_table_version`` always writes the sidecar.  It records the
-snapshot's schema, so ``read_table_version`` reads with a declared
-schema and starts no footer-inference job, and the caller's ``meta``
-(the streaming batch id), so replay guards resolve it with one
-driver-side file read instead of a Spark job per table per
-micro-batch.  Older layouts still read: r14 sidecars hold the bare
-caller ``meta`` dict, and pre-r14 snapshots have no sidecar, where
-every guard falls back to the ``max(_batch)`` scan.
+``write_table_version`` always writes the sidecar, and it is the only
+record of a commit's facts.  It holds the snapshot's schema, so
+``read_table_version`` reads with a declared schema and starts no
+footer-inference job, and the caller's ``meta``: for a maintained-state
+table the committed batch id, which the replay guard reads with one
+driver-side file read before any snapshot is read.  The batch id is
+not a column of the data.
 """
 
 from __future__ import annotations
 
 import datetime
 import decimal
-import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from hdfs_stream_processing_spark import get_spark
@@ -50,39 +47,79 @@ def test_meta_roundtrip_and_absence(spark, tmp_path):
     assert read_table_version(spark, tdir, 3).columns == ["k", "v"]
 
 
-def test_rollup_replay_guard_without_sidecar(spark, tmp_path):
-    """A snapshot committed without ``meta`` must still arm the replay
-    guard through the max(_batch) fallback scan."""
+def test_missing_sidecar_raises(spark, tmp_path):
+    """Every published snapshot has a sidecar; reading one without it
+    is an error, not a fallback."""
+    from hdfs_stream_processing_spark.sources.io import (
+        read_table_version,
+        table_version_meta,
+        write_table_version,
+    )
+
+    tdir = str(tmp_path / "t")
+    write_table_version(spark, spark.createDataFrame([(1,)], "k int"), tdir, {"batch": 0})
+    os.remove(os.path.join(tdir, "v=1", "_meta.json"))
+    with pytest.raises(FileNotFoundError, match="_meta.json"):
+        read_table_version(spark, tdir)
+    with pytest.raises(FileNotFoundError, match="_meta.json"):
+        table_version_meta(spark, tdir)
+
+
+def test_rollup_snapshot_is_the_merge_and_replay_reads_only_the_sidecar(
+    spark, tmp_path
+):
+    """The snapshot ``rollup_apply_batch`` commits has exactly the
+    merge's columns, its batch id lives in the sidecar, and a replay is
+    skipped from the sidecar alone: with the snapshot's data gone it
+    still skips, and starts no Spark job."""
+    import shutil
+
     from hdfs_stream_processing_spark.sources.io import (
         read_table_version,
         table_latest_version,
-        write_table_version,
+        table_version_meta,
     )
     from hdfs_stream_processing_spark.streaming.pipeline import rollup_apply_batch
 
     tdir = str(tmp_path / "roll")
-    # data carries _batch, the sidecar no batch id
-    seed = spark.createDataFrame([("a", 2)], "k string, n long").withColumn(
-        "_batch", F.lit(0).cast("long")
-    )
-    write_table_version(spark, seed, tdir)
-
     batch = spark.createDataFrame([("a", 3), ("b", 1)], "k string, n long")
-    # replay of batch 0 must be skipped via the fallback scan
-    assert not rollup_apply_batch(batch, tdir, ["k"], ["n"], batch_id=0)
-    assert table_latest_version(spark, tdir) == 1
-    # batch 1 folds in and commits WITH the sidecar
+    assert rollup_apply_batch(batch, tdir, ["k"], ["n"], batch_id=0)
     assert rollup_apply_batch(batch, tdir, ["k"], ["n"], batch_id=1)
-    from hdfs_stream_processing_spark.sources.io import table_version_meta
+    snap = read_table_version(spark, tdir)
+    assert snap.columns == ["k", "n"]
+    assert {r["k"]: r["n"] for r in snap.collect()} == {"a": 6, "b": 2}
+    assert table_version_meta(spark, tdir) == {"batch": 1}
 
-    assert table_version_meta(spark, tdir, 2) == {"batch": 1}
-    got = {
-        r["k"]: r["n"]
-        for r in read_table_version(spark, tdir).drop("_batch").collect()
-    }
-    assert got == {"a": 5, "b": 1}
-    # replaying batch 1 is now guarded by the sidecar alone
-    assert not rollup_apply_batch(batch, tdir, ["k"], ["n"], batch_id=1)
+    shutil.rmtree(os.path.join(tdir, "v=2", "data"))
+    sc = spark.sparkContext
+    sc.setJobGroup("replay_guard", "replay an absorbed batch")
+    try:
+        for bid in (0, 1):
+            assert not rollup_apply_batch(batch, tdir, ["k"], ["n"], batch_id=bid)
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup("replay_guard")) == []
+    assert table_latest_version(spark, tdir) == 2
+
+
+@pytest.mark.parametrize("meta", [None, {"x": 1}], ids=["no_meta", "meta_without_batch"])
+def test_commit_on_a_snapshot_without_batch_raises(spark, tmp_path, meta):
+    """A latest snapshot whose sidecar records no ``batch`` was not
+    committed by ``apply_versioned_batch``: its replay guard has
+    nothing to compare against, so the commit raises, naming the
+    table, and publishes nothing."""
+    from hdfs_stream_processing_spark.sources.io import (
+        apply_versioned_batch,
+        table_latest_version,
+        write_table_version,
+    )
+
+    tdir = str(tmp_path / "plain")
+    d = spark.createDataFrame([(1, 10)], "k int, v int")
+    write_table_version(spark, d, tdir, meta=meta)
+    with pytest.raises(ValueError, match="plain"):
+        apply_versioned_batch(spark, tdir, 0, lambda existing: d)
+    assert table_latest_version(spark, tdir) == 1
 
 
 def test_recorded_schema_round_trip_starts_no_job(spark, tmp_path):
@@ -122,50 +159,3 @@ def test_recorded_schema_round_trip_starts_no_job(spark, tmp_path):
     inferred = spark.read.parquet(f"{tdir}/v=1/data")
     assert got.schema == inferred.schema
     assert sorted(got.collect()) == sorted(inferred.collect())
-
-
-def _plant_legacy_sidecar(tdir: str, v: int, doc: dict | None) -> None:
-    """Rewrite snapshot ``v``'s sidecar in an older layout: ``None``
-    removes it (pre-r14), a dict replaces it with that bare dict (r14).
-    The Hadoop local FS checksum file goes with it."""
-    vdir = os.path.join(tdir, f"v={v}")
-    for name in ("_meta.json", "._meta.json.crc"):
-        os.remove(os.path.join(vdir, name))
-    if doc is not None:
-        with open(os.path.join(vdir, "_meta.json"), "w") as f:
-            json.dump(doc, f)
-
-
-@pytest.mark.parametrize(
-    "legacy", [None, {"batch": 0}], ids=["no_sidecar", "bare_dict_sidecar"]
-)
-def test_legacy_sidecar_layouts_read_and_guard(spark, tmp_path, legacy):
-    """Snapshots whose sidecar predates the schema record still read
-    (schema inferred from the footers) and still arm the replay
-    guard: from the bare meta dict, or from the max(_batch) scan."""
-    from hdfs_stream_processing_spark.sources.io import (
-        read_table_version,
-        table_latest_version,
-        table_version_meta,
-    )
-    from hdfs_stream_processing_spark.streaming.pipeline import rollup_apply_batch
-
-    tdir = str(tmp_path / "roll")
-    batch = spark.createDataFrame([("a", 3), ("b", 1)], "k string, n long")
-    assert rollup_apply_batch(batch, tdir, ["k"], ["n"], batch_id=0)
-    _plant_legacy_sidecar(tdir, 1, legacy)
-
-    assert table_version_meta(spark, tdir) == legacy
-    snap = read_table_version(spark, tdir)
-    assert snap.schema == spark.read.parquet(f"{tdir}/v=1/data").schema
-    assert {r["k"]: r["n"] for r in snap.collect()} == {"a": 3, "b": 1}
-
-    assert not rollup_apply_batch(batch, tdir, ["k"], ["n"], batch_id=0)
-    assert table_latest_version(spark, tdir) == 1
-    assert rollup_apply_batch(batch, tdir, ["k"], ["n"], batch_id=1)
-    assert table_version_meta(spark, tdir) == {"batch": 1}
-    got = {
-        r["k"]: r["n"]
-        for r in read_table_version(spark, tdir).drop("_batch").collect()
-    }
-    assert got == {"a": 6, "b": 2}

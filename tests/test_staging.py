@@ -4,6 +4,8 @@ after its write returns, and reused by every later call."""
 
 import os
 import shutil
+import subprocess
+import sys
 
 import pytest
 
@@ -51,8 +53,48 @@ def test_second_call_reuses_the_dir_without_writing():
         shutil.rmtree(d)
 
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(Q.__file__)))
+
+
+def _run_python(code: str) -> list[str]:
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=REPO, capture_output=True, text=True, check=True, timeout=120,
+    )
+    return out.stdout.split()
+
+
+def test_scratch_dirs_are_removed_when_their_process_exits():
+    made, existed = _run_python(
+        "import os\n"
+        "from hdfs_stream_processing_spark import queries as Q\n"
+        "d = Q._mkdtemp('hsp_probe_')\n"
+        "print(d, os.path.isdir(d))\n"
+    )
+    assert existed == "True"
+    assert not os.path.exists(made)
+    assert not os.path.exists(os.path.dirname(made))  # the per-process root
+
+
+def test_a_forked_child_leaves_its_parents_scratch_dirs():
+    made, child_saw, parent_saw = _run_python(
+        "import os, sys\n"
+        "from hdfs_stream_processing_spark import queries as Q\n"
+        "d = Q._mkdtemp('hsp_probe_')\n"
+        "print(d, flush=True)\n"
+        "pid = os.fork()\n"
+        "if pid == 0:\n"
+        "    print(os.path.isdir(d), flush=True)\n"
+        "    sys.exit(0)\n"
+        "os.waitpid(pid, 0)\n"
+        "print(os.path.isdir(d))\n"
+    )
+    assert (child_saw, parent_saw) == ("True", "True")
+    assert not os.path.exists(made)
+
+
 def _tmp_files() -> dict[str, tuple[int, int]]:
-    base = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(Q.__file__))), ".tmp")
+    base = os.path.join(REPO, ".tmp")
     files = {}
     for root, _, names in os.walk(base):
         for n in names:

@@ -645,11 +645,11 @@ def test_stream_scd2_split_invariance_and_replay(spark, tmp_path):
     import datetime as dt
 
     from hdfs_stream_processing_spark.operators.incremental import scd2_build
-    from hdfs_stream_processing_spark.sources.io import table_latest_version
-    from hdfs_stream_processing_spark.streaming.pipeline import (
-        read_scd2_snapshot,
-        scd2_apply_batch,
+    from hdfs_stream_processing_spark.sources.io import (
+        read_table_version,
+        table_latest_version,
     )
+    from hdfs_stream_processing_spark.streaming.pipeline import scd2_apply_batch
 
     t0 = dt.datetime(2024, 1, 1)
     log = [
@@ -677,7 +677,7 @@ def test_stream_scd2_split_invariance_and_replay(spark, tmp_path):
             )
             lo = hi
         got = sorted(
-            read_scd2_snapshot(spark, tdir).collect(),
+            read_table_version(spark, tdir).collect(),
             key=lambda r: (r["k"], r["valid_from"]),
         )
         assert got == want, f"split {split}"
@@ -691,7 +691,7 @@ def test_stream_scd2_split_invariance_and_replay(spark, tmp_path):
     )
     assert table_latest_version(spark, tdir) == v_before
     got = sorted(
-        read_scd2_snapshot(spark, tdir).collect(),
+        read_table_version(spark, tdir).collect(),
         key=lambda r: (r["k"], r["valid_from"]),
     )
     assert got == want
@@ -727,7 +727,7 @@ def test_stream_rollup_split_invariance_and_replay(spark, tmp_path):
             lo = hi
         got = {
             (r["g"], r["t"]): r["n"]
-            for r in read_table_version(spark, tdir).drop("_batch").collect()
+            for r in read_table_version(spark, tdir).collect()
         }
         assert got == want, f"split {split}"
 
@@ -741,7 +741,7 @@ def test_stream_rollup_split_invariance_and_replay(spark, tmp_path):
     assert table_latest_version(spark, tdir) == v
     got = {
         (r["g"], r["t"]): r["n"]
-        for r in read_table_version(spark, tdir).drop("_batch").collect()
+        for r in read_table_version(spark, tdir).collect()
     }
     assert got == want
 
@@ -752,9 +752,9 @@ def test_stream_golden_split_invariance_and_crash_replay(spark, tmp_path):
     full build; a replayed absorbed batch commits nothing; exactly ONE
     combined snapshot commits per batch (r15 single-commit contract —
     a crash can no longer stamp some tables and not others, because the
-    pointer flip is the last step of the one commit); and a
-    sidecar-less snapshot's replay guard falls back to the max(_batch)
-    scan."""
+    pointer flip is the last step of the one commit); and a latest
+    snapshot whose sidecar records no batch id stops the next batch
+    instead of being folded into."""
     from hdfs_stream_processing_spark.operators.dedup import (
         lsh_candidate_pairs,
         minhash_signature_wide,
@@ -785,7 +785,7 @@ def test_stream_golden_split_invariance_and_crash_replay(spark, tmp_path):
     full = spark.createDataFrame(rows, ddl)
 
     sig = minhash_signature_wide(full, "doc_id", "text", 8, 2)
-    comp = connected_components(lsh_candidate_pairs(sig, "doc_id", 8, 2, wide=True))
+    comp = connected_components(lsh_candidate_pairs(sig, "doc_id", 8, 2))
     want = sorted(
         _golden_from_members(
             full.join(comp, full.doc_id == comp.id).select(
@@ -806,9 +806,7 @@ def test_stream_golden_split_invariance_and_crash_replay(spark, tmp_path):
 
     def golden_of(state):
         return sorted(
-            _golden_slice(
-                read_table_version(spark, state).drop("_batch"), "golden"
-            ).collect()
+            _golden_slice(read_table_version(spark, state), "golden").collect()
         )
 
     def run_split(split, tag):
@@ -832,14 +830,14 @@ def test_stream_golden_split_invariance_and_crash_replay(spark, tmp_path):
     assert not golden_apply_batch(spark.createDataFrame(rows[3:6], ddl), state, 1)
     assert table_latest_version(spark, state) == v
 
-    # sidecar-less snapshot (pre-r14 layout): replay guard must fall
-    # back to the max(_batch) scan — re-commit the same content via a
-    # BARE write_table_version (no meta), then replay batch 1
-    state = run_split([3, 6], "fallback")
-    snap = read_table_version(spark, state)
-    write_table_version(spark, snap, state)  # no meta sidecar
+    # a snapshot committed without a batch id (a BARE
+    # write_table_version of the same content) cannot arm the replay
+    # guard: the next batch raises and commits nothing
+    state = run_split([3, 6], "no_batch")
+    write_table_version(spark, read_table_version(spark, state), state)
     v = table_latest_version(spark, state)
-    assert not golden_apply_batch(spark.createDataFrame(rows[3:6], ddl), state, 1)
+    with pytest.raises(ValueError, match="no committed batch"):
+        golden_apply_batch(spark.createDataFrame(rows[3:6], ddl), state, 1)
     assert table_latest_version(spark, state) == v
     assert golden_of(state) == want
 
@@ -847,11 +845,14 @@ def test_stream_golden_split_invariance_and_crash_replay(spark, tmp_path):
 def test_stream_golden_state_keeps_last_two_snapshots(spark, tmp_path):
     """The golden state is vacuumed like every maintained table: after
     six single-document batches only the last two snapshots remain,
-    and the latest carries the long batch stamp."""
+    and the latest records its batch id in the commit sidecar only."""
     import os
 
     from hdfs_stream_processing_spark.queries_advanced import golden_apply_batch
-    from hdfs_stream_processing_spark.sources.io import read_table_version
+    from hdfs_stream_processing_spark.sources.io import (
+        read_table_version,
+        table_version_meta,
+    )
 
     ddl = "doc_id bigint, text string, lang string, source string, n_chars bigint"
     rows = [
@@ -861,9 +862,8 @@ def test_stream_golden_state_keeps_last_two_snapshots(spark, tmp_path):
     for bid, row in enumerate(rows):
         assert golden_apply_batch(spark.createDataFrame([row], ddl), state, bid)
     assert sorted(n for n in os.listdir(state) if n.startswith("v=")) == ["v=5", "v=6"]
-    snap = read_table_version(spark, state)
-    assert dict(snap.dtypes)["_batch"] == "bigint"
-    assert {r[0] for r in snap.select("_batch").distinct().collect()} == {5}
+    assert table_version_meta(spark, state)["batch"] == 5
+    assert "_batch" not in read_table_version(spark, state).columns
 
 
 def test_stream_ivf_equals_one_shot_assignment(spark):
