@@ -20,8 +20,14 @@ Scale notes
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from hdfs_stream_processing_spark.plans.inspect import fits_broadcast
+
+_log = logging.getLogger(__name__)
 
 __all__ = [
     "agg_retract_merge",
@@ -208,9 +214,10 @@ def rollup_merge(
     stores sufficient statistics, not finished answers.
 
     Scale: one union + one hash agg on the key — the merged table is
-    keyed-small (group cardinality, not event cardinality); both sides
-    partial-aggregate map-side before the single exchange.  This is
-    :func:`rollup_merge_mixed` with every column a ``'sum'``.
+    keyed-small (group cardinality, not event cardinality).  This is
+    :func:`rollup_merge_mixed` with every column a ``'sum'``, so it
+    takes that function's route: no exchange at all when the union is
+    under the broadcast threshold, one exchange on the key above it.
     """
     return rollup_merge_mixed(
         existing, batch_partial, keys, {c: "sum" for c in merge_cols}
@@ -236,18 +243,30 @@ def rollup_merge_mixed(
     substring-scrub keeper "smallest (doc, offset) that ever carried
     this window content" is a plain min-merge.
 
-    Scale: one union + one hash agg on the key, map-side partials on
-    both sides.
+    Scale: one union + one hash agg on the key.  Route: when Catalyst
+    estimates the union at or under the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` (the small state a
+    streaming maintainer keeps), the union is coalesced to one
+    partition before the agg: a single partition already satisfies the
+    key distribution, so the merge plans no exchange and AQE starts no
+    map-stage job for it.  Above the threshold (or with it at -1) the
+    agg shuffles on the key, with map-side partials on both sides.
+    The decision is logged at DEBUG.
     """
     bad = {fn for fn in merge_spec.values() if fn not in _MERGE_FNS}
     if bad:
         raise ValueError(f"unsupported merge fns {sorted(bad)}; use sum/min/max")
     cols = list(merge_spec)
-    return (
-        existing.select(*keys, *cols)
-        .unionByName(batch_partial.select(*keys, *cols))
-        .groupBy(*keys)
-        .agg(*[_MERGE_FNS[fn](c).alias(c) for c, fn in merge_spec.items()])
+    union = existing.select(*keys, *cols).unionByName(batch_partial.select(*keys, *cols))
+    fits, size, threshold = fits_broadcast(union)
+    _log.debug(
+        "rollup_merge_mixed route=%s size=%d threshold=%d",
+        "one_partition" if fits else "shuffle", size, threshold,
+    )
+    if fits:
+        union = union.coalesce(1)
+    return union.groupBy(*keys).agg(
+        *[_MERGE_FNS[fn](c).alias(c) for c, fn in merge_spec.items()]
     )
 
 

@@ -72,6 +72,26 @@ def plan_summary(df: DataFrame) -> dict:
     }
 
 
+def fits_broadcast(df: DataFrame) -> tuple[bool, int, int]:
+    """``(fits, size, threshold)``: Catalyst's size estimate of ``df``
+    against the session's ``spark.sql.autoBroadcastJoinThreshold``,
+    compared the way Spark decides a broadcast join.  What Spark trusts
+    to ship whole to every task is also small enough for one task or
+    the driver to hold, so small-state routes reuse this existing knob
+    instead of adding one; a threshold of -1 (broadcast off) turns them
+    off too.
+
+    The estimate is taken on the analyzed plan, which every DataFrame
+    already has; running the optimizer for it would cost a full
+    optimization per probe, paid again when the probed plan runs.
+    Starts no Spark job."""
+    stats = df._jdf.queryExecution().analyzed().stats()
+    size = int(str(stats.sizeInBytes()))  # a Scala BigInt
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    threshold = int(conf.autoBroadcastJoinThreshold())
+    return 0 <= size <= threshold, size, threshold
+
+
 def optimized_plan(df: DataFrame) -> str:
     """Catalyst-optimized logical plan as text (runtime-filter
     injections — bloom, DPP subqueries — appear here before physical

@@ -12,6 +12,7 @@ py4j, no inference passes.
 from __future__ import annotations
 
 import json
+import logging
 import re
 from collections.abc import Callable
 
@@ -19,9 +20,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hdfs_stream_processing_spark.plans.inspect import fits_broadcast
 from hdfs_stream_processing_spark.schemas import DRIVER_TABLES, schema_for
 
 TABLE_NAMES = list(DRIVER_TABLES)
+_log = logging.getLogger(__name__)
 
 #: Attribute holding each session's memo of ANALYZED base-table
 #: DataFrames (r15, guide §7.3 "driver-side single-process work"):
@@ -402,6 +405,61 @@ def table_latest_version(spark: SparkSession, table_dir: str) -> int | None:
     return int(raw) if raw.strip() else None
 
 
+#: Types that Spark's Parquet reader reads back as the same type from
+#: their Arrow form written by ``pyarrow.parquet``; a snapshot with any
+#: other type (intervals, variant, time, void, UDTs) takes the Spark
+#: write.
+_DRIVER_ENCODABLE = (
+    T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+    T.FloatType, T.DoubleType, T.DecimalType, T.StringType, T.BinaryType,
+    T.DateType, T.TimestampType, T.TimestampNTZType,
+)
+
+
+def _driver_encodable(dt: T.DataType) -> bool:
+    if isinstance(dt, T.StructType):
+        names = [f.name.lower() for f in dt.fields]
+        return len(set(names)) == len(names) and all(
+            _driver_encodable(f.dataType) for f in dt.fields
+        )
+    if isinstance(dt, T.ArrayType):
+        return _driver_encodable(dt.elementType)
+    if isinstance(dt, T.MapType):
+        return _driver_encodable(dt.keyType) and _driver_encodable(dt.valueType)
+    return type(dt) in _DRIVER_ENCODABLE
+
+
+def _write_driver_parquet(df: DataFrame, fs, hpath) -> None:
+    """Collect ``df`` once as Arrow, encode it as one Parquet file on the
+    driver and write the bytes to ``hpath`` through the Hadoop
+    FileSystem ``fs``.
+
+    The footer records the Spark version, as a Spark write does: a
+    file without it is read under
+    ``spark.sql.parquet.datetimeRebaseModeInRead`` (EXCEPTION by
+    default), which raises on pre-1582 dates and timestamps, while
+    with it Spark reads them as proleptic Gregorian — what Arrow
+    wrote.
+
+    The batches are taken as the JVM encoded them, not through
+    ``toArrow()``: its cast to the Spark-derived Arrow schema rejects a
+    null struct that has a non-nullable field."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    batches = df._collect_as_arrow(empty_list_if_zero_records=False)
+    table = pa.Table.from_batches(batches).replace_schema_metadata(
+        {"org.apache.spark.version": df.sparkSession.version}
+    )
+    sink = pa.BufferOutputStream()
+    pq.write_table(table, sink)
+    out = fs.create(hpath, False)
+    try:
+        out.write(sink.getvalue().to_pybytes())
+    finally:
+        out.close()
+
+
 def write_table_version(
     spark: SparkSession,
     df: DataFrame,
@@ -411,7 +469,8 @@ def write_table_version(
     """Commit ``df`` as the table's next immutable snapshot and publish
     it — the minimal form of the Iceberg/Delta snapshot protocol:
 
-    1. data lands in a NEW directory ``v=<n>/`` (never touched again);
+    1. data lands in a NEW directory ``v=<n>/data/`` (never touched
+       again);
     2. the sidecar ``v=<n>/_meta.json`` is written;
     3. the ``_latest`` pointer file is written aside as ``_latest.tmp``
        and renamed over the old pointer.
@@ -422,10 +481,22 @@ def write_table_version(
     :func:`vacuum_table_versions` retires it — time travel, audits,
     and rollback are all "read an older v=".
 
-    ``n`` is one past the larger of the pointer and the highest
-    ``v=<k>`` in the table directory, so a snapshot orphaned by a
-    crash before its pointer flip is skipped over instead of failing
-    every retry on an existing path; vacuum removes it later.
+    Route for step 1: when Catalyst estimates ``df`` at or under the
+    session's ``spark.sql.autoBroadcastJoinThreshold`` and every column
+    type round-trips through Arrow, the state is collected once as
+    Arrow and written by the driver as
+    ``v=<n>/data/part-00000.parquet`` through the same Hadoop
+    FileSystem handle as the sidecar and pointer (so HDFS and S3A
+    paths work) — no Spark write job.  Larger state, other types, or
+    the threshold at -1 take the Spark write.  The decision is logged
+    at DEBUG; both routes read back the same through the sidecar
+    schema.
+
+    ``n`` is one past the highest ``v=<k>`` in the table directory.
+    The published snapshot is always listed (vacuum never removes
+    it), and a snapshot orphaned by a crash before its pointer flip is
+    skipped over instead of failing every retry on an existing path;
+    vacuum removes it later.
 
     The delete+rename pointer flip is atomic enough for a single
     writer (this engine's loaders run one committer per table); a
@@ -446,10 +517,19 @@ def write_table_version(
     """
     Path, fs = _fs_for(spark, table_dir)
     base = table_dir.rstrip("/")
-    n = 1 + max(
-        [table_latest_version(spark, table_dir) or 0, *_listed_versions(fs, Path, base)]
+    n = 1 + max(_listed_versions(fs, Path, base), default=0)
+    data = f"{base}/v={n}/data"
+    encodable = _driver_encodable(df.schema)
+    fits, size, threshold = fits_broadcast(df)
+    driver = encodable and fits
+    _log.debug(
+        "write_table_version route=%s size=%d threshold=%d encodable=%s",
+        "driver" if driver else "spark", size, threshold, encodable,
     )
-    df.write.mode("error").parquet(f"{base}/v={n}/data")
+    if driver:
+        _write_driver_parquet(df, fs, Path(f"{data}/part-00000.parquet"))
+    else:
+        df.write.mode("error").parquet(data)
     sidecar = {"meta": meta, "schema": df.schema.jsonValue()}
     _write_text(fs, Path(f"{base}/v={n}/_meta.json"), json.dumps(sidecar))
     tmp = Path(f"{base}/_latest.tmp")
@@ -534,8 +614,10 @@ def apply_versioned_batch(
     guard reads only the latest sidecar (a driver-side file read, no
     Spark job) and returns before the snapshot is read.  A latest
     snapshot whose sidecar records no ``batch`` was not committed by
-    this function, so the guard has nothing to compare: ValueError.  Returns True when a snapshot was committed,
-    False for a replay skip.
+    this function, so the guard has nothing to compare: ValueError.
+
+    Returns True when a snapshot was committed, False for a replay
+    skip.
     """
     latest = table_latest_version(spark, table_dir)
     existing = None

@@ -166,7 +166,9 @@ SHUFFLE_BUDGETS = {
     "incr_rollup": 2,      # two partial aggs; the merge reuses their keying
     "avg_yearly": 2,       # per-part avg agg + final scalar reduce; fact
                            # scan joins broadcast-only, never shuffles
-    "incr_topk": 3,        # two partial count aggs + merged ranking window
+    "incr_topk": 2,        # two partial count aggs; the small merged
+                           # counts sit in one partition, which the
+                           # ranking window reuses
     "incr_pack": 2,        # history pack shard exchange + batch shard
                            # exchange; cursor state broadcasts
     # round-6 decision-support suite (queries_dss.py) — at sf0.01 every
@@ -383,13 +385,15 @@ def test_shuffle_budgets(spark):
 
 
 def test_rollup_step_job_budget(spark, tmp_path):
-    """A maintained-rollup step on an existing table starts exactly 3
-    Spark jobs: the batch partial's shuffle map stage, the merge's
-    shuffle map stage, and the snapshot write.  Reading the previous
-    snapshot starts none, because its schema comes from the commit
-    sidecar; a footer-inference job there would make it 4.  A replay
-    of the same batch starts none: its stamp is read from the sidecar
-    on the driver."""
+    """A maintained-rollup step on an existing small table starts
+    exactly 2 Spark jobs: the batch partial's shuffle map stage and the
+    collect of the merged state.  The merge runs in one partition, so
+    it has no map stage of its own, and the driver writes the snapshot
+    from the collected Arrow, so there is no write job.  Reading the
+    previous snapshot starts none, because its schema comes from the
+    commit sidecar; a footer-inference job there would add one.  A
+    replay of the same batch starts none: its stamp is read from the
+    sidecar on the driver."""
     from hdfs_stream_processing_spark.streaming.pipeline import rollup_apply_batch
 
     tdir = str(tmp_path / "roll")
@@ -410,8 +414,8 @@ def test_rollup_step_job_budget(spark, tmp_path):
         assert not step(1)  # replay skip
     finally:
         sc.setJobGroup(None, None)
-    assert n_step == 3
-    assert len(sc.statusTracker().getJobIdsForGroup("rollup_step")) == 3
+    assert n_step == 2
+    assert len(sc.statusTracker().getJobIdsForGroup("rollup_step")) == 2
 
 
 def test_plans_md_agrees_with_live_audit(spark):

@@ -279,6 +279,47 @@ def test_commit_skips_snapshot_orphaned_before_pointer_flip(spark, tmp_path):
     assert sorted(n for n in os.listdir(tdir) if n.startswith("v=")) == ["v=3", "v=4"]
 
 
+def test_driver_route_crash_before_pointer_flip_leaves_a_skipped_orphan(
+    spark, tmp_path, monkeypatch
+):
+    """Crash window (a) on the driver write route: the commit dies after
+    the driver wrote ``v=<n>/data/part-00000.parquet`` and before the
+    sidecar and pointer.  The pointer still publishes the old snapshot,
+    the retried commit takes the next free version, and a later vacuum
+    retires the orphan."""
+    import os
+
+    from hdfs_stream_processing_spark.sources import io
+    from hdfs_stream_processing_spark.streaming.pipeline import rollup_apply_batch
+
+    tdir = str(tmp_path / "roll")
+    # VALUES has a size estimate, so the commit takes the driver route
+    batch = spark.sql("SELECT * FROM VALUES ('a', 2L), ('b', 1L) AS t(k, n)")
+    assert rollup_apply_batch(batch, tdir, ["k"], ["n"], batch_id=0)
+
+    write_text = io._write_text
+
+    def crash_at_sidecar(fs, hpath, text):
+        if hpath.getName() == "_meta.json":
+            raise OSError("crash after the data file")
+        write_text(fs, hpath, text)
+
+    monkeypatch.setattr(io, "_write_text", crash_at_sidecar)
+    with pytest.raises(OSError, match="crash"):
+        rollup_apply_batch(batch, tdir, ["k"], ["n"], batch_id=1)
+    monkeypatch.undo()
+    orphan = [n for n in os.listdir(f"{tdir}/v=2/data") if not n.startswith(".")]
+    assert orphan == ["part-00000.parquet"]
+    assert io.table_latest_version(spark, tdir) == 1
+
+    assert rollup_apply_batch(batch, tdir, ["k"], ["n"], batch_id=1)
+    assert io.table_latest_version(spark, tdir) == 3
+    got = {r["k"]: r["n"] for r in io.read_table_version(spark, tdir).collect()}
+    assert got == {"a": 4, "b": 2}
+    assert rollup_apply_batch(batch, tdir, ["k"], ["n"], batch_id=2)
+    assert sorted(n for n in os.listdir(tdir) if n.startswith("v=")) == ["v=3", "v=4"]
+
+
 def test_commit_recovers_pointer_lost_between_delete_and_rename(spark, tmp_path):
     """Crash window (b): a crash after the old ``_latest`` is deleted
     but before ``_latest.tmp`` is renamed over it leaves no pointer.

@@ -1,4 +1,5 @@
-"""Snapshot commit sidecar ``v=<n>/_meta.json``.
+"""Snapshot commit sidecar ``v=<n>/_meta.json``, and the small-state
+routes of a maintained-state commit.
 
 ``write_table_version`` always writes the sidecar, and it is the only
 record of a commit's facts.  It holds the snapshot's schema, so
@@ -7,12 +8,18 @@ footer-inference job, and the caller's ``meta``: for a maintained-state
 table the committed batch id, which the replay guard reads with one
 driver-side file read before any snapshot is read.  The batch id is
 not a column of the data.
+
+Small state (under the session's broadcast threshold) merges in one
+partition and is written by the driver from Arrow; the threshold at -1
+forces the distributed routes.  Both commit the same snapshot.
 """
 
 from __future__ import annotations
 
+import contextlib
 import datetime
 import decimal
+import json
 import os
 
 import pytest
@@ -159,3 +166,144 @@ def test_recorded_schema_round_trip_starts_no_job(spark, tmp_path):
     inferred = spark.read.parquet(f"{tdir}/v=1/data")
     assert got.schema == inferred.schema
     assert sorted(got.collect()) == sorted(inferred.collect())
+
+
+@contextlib.contextmanager
+def _session_conf(spark, conf: dict[str, str]):
+    """Set session conf keys for the block, then restore them."""
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+#: Forces the distributed routes: broadcast off means nothing is small.
+SPARK_ROUTE = {"spark.sql.autoBroadcastJoinThreshold": "-1"}
+
+#: One row per shape: values, nulls everywhere, edge values.  A SQL
+#: VALUES table plans as a local relation with a size estimate; a
+#: ``createDataFrame`` of Python rows has none and takes the Spark
+#: routes.
+ROUTE_ROWS = """
+SELECT * FROM VALUES
+  (1, 4611686018427387904L, 1e300D, 12345678.91BD,
+   CAST('12345678901234567890.123456789012345678' AS DECIMAL(38,18)), 'ä', X'00FF',
+   true, DATE'1000-01-01', TIMESTAMP'2024-02-29 23:59:59.123456',
+   TIMESTAMP_NTZ'1969-12-31 23:59:59', ARRAY(1L, NULL, 3L),
+   MAP('x', 1.5D, 'y', CAST(NULL AS DOUBLE)), NAMED_STRUCT('a', 7, 'z', CAST(NULL AS STRING))),
+  (2, NULL, NULL, NULL, NULL, '', NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL),
+  (3, -9223372036854775808L, -0.0D, -0.01BD, CAST(0 AS DECIMAL(38,18)), 'c', X'',
+   false, DATE'2024-02-29', TIMESTAMP'1970-01-01 00:00:00',
+   TIMESTAMP_NTZ'2024-02-29 23:59:59.123456', ARRAY(), MAP(), NAMED_STRUCT('a', -1, 'z', 'z'))
+  AS t(id, l, d, dec10, dec38, s, b, flag, day, ts, ntz, arr, m, st)
+"""
+ROUTE_TYPES = [
+    "int", "bigint", "double", "decimal(10,2)", "decimal(38,18)", "string", "binary",
+    "boolean", "date", "timestamp", "timestamp_ntz", "array<bigint>",
+    "map<string,double>", "struct<a:int,z:string>",
+]
+
+
+def _route_rows(spark):
+    df = spark.sql(ROUTE_ROWS)
+    assert [f.dataType.simpleString() for f in df.schema] == ROUTE_TYPES
+    assert not df.schema["id"].nullable and df.schema["l"].nullable
+    return df
+
+
+def _commit_by_both_routes(spark, tmp_path, df):
+    """Commit ``df`` once by each write route; returns the two table
+    dirs, after checking which route wrote each."""
+    from hdfs_stream_processing_spark.sources.io import write_table_version
+
+    driver, dist = str(tmp_path / "driver"), str(tmp_path / "spark")
+    write_table_version(spark, df, driver)
+    # a Spark write of pre-1582 dates raises under the default rebase mode
+    with _session_conf(
+        spark, {**SPARK_ROUTE, "spark.sql.parquet.datetimeRebaseModeInWrite": "CORRECTED"}
+    ):
+        write_table_version(spark, df, dist)
+
+    def files(d):  # without the local file system's .crc files
+        return sorted(n for n in os.listdir(f"{d}/v=1/data") if not n.startswith("."))
+
+    assert files(driver) == ["part-00000.parquet"]
+    assert "_SUCCESS" in files(dist)
+    return driver, dist
+
+
+def _sidecar_schema(table_dir):
+    with open(os.path.join(table_dir, "v=1", "_meta.json")) as f:
+        return json.load(f)["schema"]
+
+
+@pytest.mark.parametrize(
+    "tz, where",
+    [("UTC", "true"), ("America/New_York", "true"), ("UTC", "false")],
+    ids=["utc", "new_york", "empty"],
+)
+def test_driver_and_spark_write_routes_read_back_equal(spark, tmp_path, tz, where):
+    """Every column type a snapshot commonly holds — nested, nullable or
+    not, with nulls and a pre-1582 date, or no rows at all — commits
+    through the driver route and through the Spark route to snapshots
+    that read back with the same schema and rows, and the two sidecars
+    record the same schema with its nullability.  Under a non-UTC
+    session time zone too: the driver's Arrow encoding carries
+    instants, not wall clocks."""
+    from hdfs_stream_processing_spark.sources.io import read_table_version
+
+    with _session_conf(spark, {"spark.sql.session.timeZone": tz}):
+        df = _route_rows(spark).where(where)
+        driver, dist = _commit_by_both_routes(spark, tmp_path, df)
+        assert _sidecar_schema(driver) == _sidecar_schema(dist) == df.schema.jsonValue()
+        got = {d: read_table_version(spark, d) for d in (driver, dist)}
+        assert got[driver].schema == got[dist].schema
+        want = df.orderBy("id").collect()
+        assert len(want) == (3 if where == "true" else 0)
+        for snap in got.values():
+            assert snap.orderBy("id").collect() == want
+
+
+def test_rollup_merge_is_one_partition_when_small(spark, caplog):
+    """Under the broadcast threshold the merge coalesces its union to
+    one partition, so nothing shuffles above the union — only the batch
+    partial's own exchange below it remains.  With the threshold at -1
+    the merge keeps its exchange on the key.  Both give the same rows,
+    and each decision is logged at DEBUG."""
+    from pyspark.sql import functions as F
+
+    from hdfs_stream_processing_spark.operators.incremental import rollup_merge_mixed
+    from hdfs_stream_processing_spark.plans import physical_plan
+
+    def merged():
+        existing = spark.sql("SELECT * FROM VALUES ('0', 1L, 5L), ('9', 2L, 7L) AS t(k, n, lo)")
+        partial = (
+            spark.range(40)
+            .select((F.col("id") % 3).cast("string").alias("k"), F.col("id").alias("x"))
+            .groupBy("k")
+            .agg(F.count("*").alias("n"), F.min("x").alias("lo"))
+        )
+        return rollup_merge_mixed(existing, partial, ["k"], {"n": "sum", "lo": "min"})
+
+    def exchanges_above_union(df):
+        above = physical_plan(df).split("Union")[0]
+        return above.count("Exchange hashpartitioning")
+
+    logger = "hdfs_stream_processing_spark.operators.incremental"
+    with caplog.at_level("DEBUG", logger=logger):
+        small = merged()
+        with _session_conf(spark, SPARK_ROUTE):
+            big = merged()
+            assert exchanges_above_union(big) == 1
+            want = sorted(big.collect())
+    assert exchanges_above_union(small) == 0
+    assert sorted(small.collect()) == want
+    routes = [r.getMessage().split()[1] for r in caplog.records if r.name == logger]
+    assert routes == ["route=one_partition", "route=shuffle"]
